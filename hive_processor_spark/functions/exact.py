@@ -42,8 +42,3 @@ def sql_dsum(expr: str, scale: int = 4) -> str:
         f"(CAST(SUM(CAST(FLOOR(({expr}) * {factor!r}) AS DECIMAL(28,0))) AS DOUBLE)"
         f" / {factor!r})"
     )
-
-
-def sql_davg(expr: str, scale: int = 4, round_to: int = 4) -> str:
-    """DuckDB oracle fragment equivalent to :func:`davg`."""
-    return f"ROUND({sql_dsum(expr, scale)} / COUNT(*), {round_to})"

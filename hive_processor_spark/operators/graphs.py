@@ -1107,14 +1107,6 @@ _ANF_WBITS = 54
 _ANF_ALPHA = 0.7213 / (1.0 + 1.079 / 64.0)
 _ANF_HOPS = 3
 
-_ANF_EST_SQL = f"""
-        SELECT CAST(COUNT(*) AS BIGINT) AS occupied,
-               CAST(SUM(1::BIGINT << ({_ANF_WBITS + 1} - r)) AS BIGINT)
-                   AS z_occ,
-               node
-        FROM {{reg}} GROUP BY node
-"""
-
 
 def _anf_sql_iter(prev: str, out: str) -> str:
     return f"""

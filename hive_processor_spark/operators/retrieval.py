@@ -51,8 +51,8 @@ _SQL_PAIRS = f"""
 #: its 4 consumers (r11 verdict item 1). The mass is derived from the
 #: loaded frame's own parquet row count (never a local-mode constant);
 #: the crossover was measured by same-window interleaved A/B at
-#: 1×/2×/4×/10×/20×/40× corpus replicas (tools/ab_ranked_pairs.py,
-#: numbers in OPTIMIZATION_r12.md): HOF wins ≤1M pairs, the lanes cross
+#: 1×/2×/4×/10×/20×/40× corpus replicas (numbers in
+#: OPTIMIZATION_r12.md): HOF wins ≤1M pairs, the lanes cross
 #: near ~2M, kernel wins beyond. Both lanes are bit-identical, so the
 #: constant trades only time, never results.
 _KERNEL_MIN_PAIRS = 2_000_000
