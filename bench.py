@@ -21,6 +21,7 @@ import time
 import traceback
 
 from hive_processor_spark import get_spark, queries
+from hive_processor_spark.sources.tables import pin_counts
 
 #: Headline set: the BASELINE.md shapes plus one representative per
 #: operator family that matters at scale.
@@ -120,84 +121,6 @@ HEADLINE = [
 ]
 
 
-#: Queries whose per-query sweep numbers are ORDER-DEPENDENT because they
-#: share a session pin (BENCH_VARIANCE.md, round-8 note): the first family
-#: member to run pays the pin derivation; later members read it nearly
-#: free. The committed artifact therefore carries each family's TOTAL —
-#: the only order-independent attribution — next to the per-query lines.
-#: Keep in sync with the *_pinned helpers (similarity.py, dedup.py,
-#: graphs.py) and the streaming replay memo (streaming/smoke.py).
-PINNED_FAMILIES = {
-    "cosine_pair_plane": [
-        "dedup_cluster",
-        "embed_neardup",
-        "graph_cc_size_dist",
-    ],
-    "ngram_pair_plane": [
-        "dedup_cluster_docs",
-        "dedup_keep_best",
-        "dedup_recall_report",
-        "dedup_threshold_sweep",
-    ],
-    "knn_edges": [
-        "graph_anf_hyperball",
-        "graph_assortativity",
-        "graph_bfs_levels",
-        "graph_clustering_coeff",
-        "graph_label_conductance",
-        "graph_label_modularity",
-        "graph_label_propagation",
-        "graph_matmul_2hop",
-        "graph_rich_club",
-    ],
-    "simhash_pair_plane": [
-        "graph_degree",
-        "graph_kcore",
-        "graph_link_predict",
-        "graph_pagerank",
-    ],
-    "ann_plane": [
-        "sim_ann_join",
-        "sim_ann_lsh",
-        "sim_ann_pq",
-    ],
-    "bigram_ppl_plane": [
-        "pipeline_perplexity_buckets",
-        "text_bigram_perplexity",
-    ],
-    "lof_knn_plane": [
-        "profile_lof_outliers",
-    ],
-    "purchase_edges": [
-        "graph_hits_bipartite",
-        "graph_katz_paths",
-    ],
-    "shingle_index": [
-        "dedup_containment",
-        "dedup_ngram_jaccard",
-    ],
-    "daily_rev_plane": [
-        "stats_durbin_watson",
-        "ts_arch_lm",
-        "ts_cusum_squares",
-        "ts_ljung_box",
-        "ts_sample_entropy",
-    ],
-    "stream_replay": [
-        "stream_cdc_apply",
-        "stream_dlq_route",
-        "stream_late_data",
-        "stream_micro_batch",
-        "stream_session_window",
-        "stream_stateful",
-        "stream_static_join",
-        "stream_stream_join",
-        "stream_stream_left_join",
-        "stream_topk_merge",
-    ],
-}
-
-
 def main() -> int:
     full = "--full" in sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -234,9 +157,15 @@ def main() -> int:
     per_query: dict[str, float] = {}
     per_query_reps: dict[str, list[float]] = {}
     failed: list[str] = []
+    #: pin family -> queries whose warm-up run built or hit one of its pins
+    pinned_families: dict[str, list[str]] = {}
     for name in names:
         try:
+            pins_before = pin_counts()
             run(name)  # warmup: codegen + JIT
+            for fam, counts in pin_counts().items():
+                if counts != pins_before.get(fam):
+                    pinned_families.setdefault(fam, []).append(name)
             best = float("inf")
             rep_times: list[float] = []
             for _ in range(reps):
@@ -267,14 +196,17 @@ def main() -> int:
         out["worst_20"] = dict(worst)
         out["n_queries"] = len(per_query)
         out["failed"] = failed
-        # order-independent attribution for the pin-sharing families
+        # Queries sharing a session pin have ORDER-DEPENDENT per-query
+        # numbers (BENCH_VARIANCE.md, round-8 note): the first family
+        # member to run pays the pin build, later members read it nearly
+        # free. Each family's TOTAL is the order-independent attribution.
         out["pinned_family_totals"] = {
             fam: round(sum(per_query.get(q, 0.0) for q in members), 3)
-            for fam, members in PINNED_FAMILIES.items()
+            for fam, members in sorted(pinned_families.items())
         }
         out["pinned_family_members"] = {
             fam: [q for q in members if q in per_query]
-            for fam, members in PINNED_FAMILIES.items()
+            for fam, members in sorted(pinned_families.items())
         }
     print(json.dumps(out))
     return 0

@@ -31,7 +31,6 @@ Determinism discipline (applies to every hash-checked query; see SURVEY.md
 from __future__ import annotations
 
 import os
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,16 +60,6 @@ TABLES = (
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-
-#: Shared guard for every session-pin cache (ADVICE r10): the LRU-1 pin
-#: builders (``neardup_pairs_pinned``, ``ann_plane_pinned``, the dedup /
-#: textops / graphs twins) are check-then-act on module dicts with
-#: ``persist()``/``unpersist()`` side effects; two concurrent first calls
-#: in one session could double-build and leak a persisted frame or evict
-#: a bundle mid-build. Re-entrant because pin builders may call other pin
-#: builders. Build bodies only *declare* lineage + a lazy persist (no
-#: Spark job runs under the lock), so contention cost is microseconds.
-PIN_LOCK = threading.RLock()
 
 #: Round-rotating "driver-sample head" (VERDICT r10 #1). The verification
 #: driver samples ``list(queries())[:50]`` in registry order, and that head

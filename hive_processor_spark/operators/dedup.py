@@ -32,10 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_processor_spark.engine import PIN_LOCK, register
+from hive_processor_spark.engine import register
 from hive_processor_spark.functions.textexpr import guarded_fanout, ngram_join
 from hive_processor_spark.functions.vector import sq_norm_q, sql_cosine_q
-from hive_processor_spark.sources.tables import load_table
+from hive_processor_spark.sources.tables import load_table, session_pin
 
 
 @register(
@@ -250,7 +250,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: LRU-1 session pin for the hashed trigram-shingle index (round-12,
+#: Session pin for the hashed trigram-shingle index (round-12,
 #: r11 verdict item 8): ``dedup_ngram_jaccard`` and ``dedup_containment``
 #: each rebuilt the IDENTICAL (doc_id, xxhash64(shingle)) index —
 #: tokenize + shingle explode + hash + by-shingle repartition + eager
@@ -259,24 +259,14 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: remains per run. The pinned frame is checkpoint-backed (the by-shingle
 #: layout is the point: df aggregate, hot-shingle anti-join and both
 #: self-join sides reuse that one partitioning exchange-free), so
-#: eviction drops the handle and the checkpoint blocks free on GC —
-#: the ``_CC_LABEL_CACHE`` discipline.
-_SHINGLE_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: eviction (``tables.session_pin``) drops the handle and the checkpoint
+#: blocks free on GC.
 def _shingle_index_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-pinned hashed shingle index ``(doc_id, shingle)`` —
     per-doc-distinct trigram shingles, 8-byte xxhash64 ids, partitioned
     BY SHINGLE (the layout every consumer's joins reuse)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLE_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _SHINGLE_INDEX_CACHE.get(key)
-        if hit is not None:
-            return hit
-        _SHINGLE_INDEX_CACHE.clear()
+
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         # Materialize the token array as a column first: referencing `w`
         # inside the transform lambda splits each text once, where an
@@ -298,15 +288,15 @@ def _shingle_index_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
         # than letting each consumer re-shuffle). At corpus scale this
         # materialized, hash-partitioned shingle index is the standard
         # first stage of every shingle-based dedup pass.
-        df = (
+        return (
             base.select("doc_id", F.explode_outer("sh_arr").alias("s"))
             .filter(F.col("s").isNotNull())
             .select("doc_id", F.xxhash64("s").alias("shingle"))
             .repartition(spark.sparkContext.defaultParallelism, "shingle")
             .localCheckpoint(eager=True)
         )
-        _SHINGLE_INDEX_CACHE[key] = df
-        return df
+
+    return session_pin(spark, sf_dir, "shingle_index", build)
 
 
 _NGRAM_JACCARD_SQL = """
@@ -826,93 +816,49 @@ LAST_CC_ROUNDS: int | None = None
 #: frame, memoized per (session, fixture dir): ``dedup_cluster`` and
 #: ``graph_cc_size_dist`` consume the identical labeling, and the BSP
 #: loop is all job latency at toy scale — one derivation per sweep
-#: instead of one per consumer (round-7 verdict item 4). LRU-1 like the
-#: other pins; the backing localCheckpoint blocks free when the handle
-#: is dropped and GC'd.
-_CC_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: instead of one per consumer (round-7 verdict item 4). A session pin
+#: (``tables.session_pin``); the backing localCheckpoint blocks free when
+#: the handle is dropped and GC'd.
 def _neardup_labels_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CC_LABEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # deferred import (circular with similarity) — kept at function level,
-    # OUTSIDE the lock body, so the worker-import lint sees it
+    # deferred import (circular with similarity)
     from hive_processor_spark.operators.similarity import neardup_pairs_pinned
 
-    with PIN_LOCK:
-        hit = _CC_LABEL_CACHE.get(key)
-        if hit is not None:
-            return hit
-        _CC_LABEL_CACHE.clear()
+    def build() -> DataFrame:
         pairs = neardup_pairs_pinned(spark, sf_dir).select("vec_a", "vec_b")
-        df = _min_label_components(pairs)
-        _CC_LABEL_CACHE[key] = df
-        return df
+        return _min_label_components(pairs)
 
-
-#: Same two-level pin for the n-gram Jaccard plane: the pair frame feeds
-#: three consumers (``dedup_cluster_docs``, ``dedup_recall_report``,
-#: ``dedup_keep_best``) and the component labeling feeds two, so a full
-#: sweep otherwise re-runs the shingle join up to three times and the
-#: BSP loop twice. LRU-1, lineage-backed like the cosine plane's pins.
-_SIMHASH_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return session_pin(spark, sf_dir, "neardup_labels", build)
 
 
 def _simhash_pairs_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-pinned simhash near-dup pair frame (LRU-1, lineage-backed
-    like the n-gram and cosine planes): four graph consumers
+    """Session-pinned simhash near-dup pair frame (lineage-backed like the
+    n-gram and cosine planes): four graph consumers
     (graph_pagerank, graph_kcore, graph_degree_histogram's family and the
     wedge metrics) each re-derived the signature + banded join otherwise."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIMHASH_PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _SIMHASH_PAIR_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_SIMHASH_PAIR_CACHE):
-            try:
-                _SIMHASH_PAIR_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
-        df = dedup_simhash_pairs(spark, sf_dir).persist()
-        _SIMHASH_PAIR_CACHE[key] = df
-        return df
+    return session_pin(
+        spark,
+        sf_dir,
+        "simhash_pairs",
+        lambda: dedup_simhash_pairs(spark, sf_dir).persist(),
+    )
 
 
-#: LRU-1 session pin for the COLLAPSED simhash graph (round-10): the
-#: multiplicity-weighted super-node frame (simhash, m, rep) and the
-#: hamming-banded class-edge list (u, v, mu, mv). ``graph_triangles``
-#: previously re-derived both through per-run eager localCheckpoints —
-#: the signature pass plus the class self-join cost ~1.4 s of its 2.5 s
-#: at sf0.1; the wedge-close join is the only per-run work left.
-_SIMHASH_CLASS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+#: Session pin (``tables.session_pin``) for the COLLAPSED simhash graph
+#: (round-10): the multiplicity-weighted super-node frame (simhash, m,
+#: rep) and the hamming-banded class-edge list (u, v, mu, mv).
+#: ``graph_triangles`` previously re-derived both through per-run eager
+#: localCheckpoints — the signature pass plus the class self-join cost
+#: ~1.4 s of its 2.5 s at sf0.1; the wedge-close join is the only per-run
+#: work left.
 def _simhash_classes_pinned(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Session-pinned (classes, class_edges) of the simhash near-dup
     graph: one row per DISTINCT signature with multiplicity ``m`` and
     representative ``rep``; edges between classes within ``_MAX_HAMMING``
-    (lineage-backed persist, LRU-1 like the pair-frame pins above)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIMHASH_CLASS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _SIMHASH_CLASS_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_SIMHASH_CLASS_CACHE):
-            for df in _SIMHASH_CLASS_CACHE.pop(k):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # stale session handle — nothing left to release
+    (lineage-backed persist, like the pair-frame pins above)."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         cls = (
             _simhash_sigs(docs)
@@ -945,47 +891,31 @@ def _simhash_classes_pinned(
             .select("u", "v", "mu", "mv")
             .persist()
         )
-        _SIMHASH_CLASS_CACHE[key] = (cls, ce)
         return cls, ce
 
-
-_NGRAM_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_NGRAM_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return session_pin(spark, sf_dir, "simhash_classes", build)
 
 
+#: Same two-level pin for the n-gram Jaccard plane: the pair frame feeds
+#: three consumers (``dedup_cluster_docs``, ``dedup_recall_report``,
+#: ``dedup_keep_best``) and the component labeling feeds two, so a full
+#: sweep otherwise re-runs the shingle join up to three times and the
+#: BSP loop twice. Lineage-backed like the cosine plane's pins.
 def _ngram_pairs_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _NGRAM_PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _NGRAM_PAIR_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_NGRAM_PAIR_CACHE):
-            try:
-                _NGRAM_PAIR_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
-        df = dedup_ngram_jaccard(spark, sf_dir).persist()
-        _NGRAM_PAIR_CACHE[key] = df
-        return df
+    return session_pin(
+        spark,
+        sf_dir,
+        "ngram_pairs",
+        lambda: dedup_ngram_jaccard(spark, sf_dir).persist(),
+    )
 
 
 def _ngram_labels_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _NGRAM_LABEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _NGRAM_LABEL_CACHE.get(key)
-        if hit is not None:
-            return hit
-        _NGRAM_LABEL_CACHE.clear()
+    def build() -> DataFrame:
         pairs = _ngram_pairs_pinned(spark, sf_dir).select("doc_a", "doc_b")
-        df = _min_label_components(pairs)
-        _NGRAM_LABEL_CACHE[key] = df
-        return df
+        return _min_label_components(pairs)
+
+    return session_pin(spark, sf_dir, "ngram_labels", build)
 
 
 @register(
@@ -1033,13 +963,10 @@ def dedup_cluster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: LRU-1 session pin for the prefix-filter shingle plane of
-#: ``dedup_ngram_verify`` (round-10, VERDICT r9 item 4): one row per
-#: DISTINCT text with the sorted 64-bit shingle-hash array, clone member
-#: list and set size.
-_NGRAM_GROUPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: Session pin (``tables.session_pin``) for the prefix-filter shingle
+#: plane of ``dedup_ngram_verify`` (round-10, VERDICT r9 item 4): one row
+#: per DISTINCT text with the sorted 64-bit shingle-hash array, clone
+#: member list and set size.
 def _ngram_groups_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-pinned (rep_id, members, h_arr, n) frame: clone-collapsed
     documents with sorted distinct shingle hashes. Shingles are hashed
@@ -1049,25 +976,14 @@ def _ngram_groups_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings; jaccard over distinct-hash arrays equals jaccard over
     distinct shingle strings, which is what the shared oracle computes.
     Short docs yield zero shingles (guarded_fanout)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _NGRAM_GROUPS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _NGRAM_GROUPS_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_NGRAM_GROUPS_CACHE):
-            try:
-                _NGRAM_GROUPS_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
+
+    def build() -> DataFrame:
         triple_hash = guarded_fanout(
             2,
             "xxhash64(element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))",
         )
         raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        df = (
+        return (
             raw.groupBy(F.md5("text").alias("h"))
             .agg(
                 F.min("doc_id").alias("rep_id"),
@@ -1089,8 +1005,8 @@ def _ngram_groups_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("rep_id", "members", "h_arr", F.size("h_arr").alias("n"))
             .persist()
         )
-        _NGRAM_GROUPS_CACHE[key] = df
-        return df
+
+    return session_pin(spark, sf_dir, "ngram_groups", build)
 
 
 @register("dedup_ngram_verify", _NGRAM_JACCARD_SQL)

@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_processor_spark.engine import PIN_LOCK, register
+from hive_processor_spark.engine import register
 from hive_processor_spark.functions.vector import dot_q, sq_norm_q, sql_cosine_q
-from hive_processor_spark.sources.tables import load_table
+from hive_processor_spark.sources.tables import load_table, session_pin
 
 #: Graph over the first 200 vectors; BFS from node 0, ≤ 6 hops.
 _N = 200
@@ -41,30 +41,14 @@ _SQL_EDGES = f"""
 #: One pinned kNN edge list per (session, fixture dir). The four
 #: edge-reusing graph metrics each persist() this derived list; without a
 #: shared handle a full registry sweep would accumulate four unreleased
-#: cache entries per pass until LRU eviction (round-3 ADVICE). Bounding the
-#: cache to a single entry — unpersisting the previous pin on replacement —
-#: caps the pinned footprint at one edge list AND lets consecutive graph
-#: queries in the same sweep reuse the materialization for free.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: cache entries per pass until LRU eviction (round-3 ADVICE). As a
+#: session pin (``tables.session_pin``) the pinned footprint is one edge
+#: list AND consecutive graph queries in the same sweep reuse the
+#: materialization for free.
 def _knn_edges_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _EDGE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_EDGE_CACHE):
-            try:
-                _EDGE_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
-        df = _knn_edges(spark, sf_dir).persist()
-        _EDGE_CACHE[key] = df
-        return df
+    return session_pin(
+        spark, sf_dir, "knn_edges", lambda: _knn_edges(spark, sf_dir).persist()
+    )
 
 
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -673,39 +657,23 @@ _HITS_TOP = 15
 
 #: One pinned distinct purchase-edge list per (session, fixture dir) —
 #: round-12 opt pass (r11 verdict item 5, extending the ``_knn_edges``
-#: pin discipline). ``graph_hits_bipartite`` consumes the edge frame in
+#: pin). ``graph_hits_bipartite`` consumes the edge frame in
 #: THREE sweep subtrees and ``graph_katz_paths`` in FIVE; each evaluation
 #: re-ran the orders ⋈ lineitem join + distinct per subtree (static plans:
 #: plans/r12/graph_{hits_bipartite,katz_paths}_before.txt carry the
-#: repeated Exchange hashpartitioning(l_orderkey) scans). The pin derives
-#: it once per session: lineage-backed persist (evicted blocks recompute,
-#: never wrong), LRU-1 (replacing a pin unpersists the old one), keyed on
-#: applicationId so a new session never reads stale state. Size law
+#: repeated Exchange hashpartitioning(l_orderkey) scans). The session pin
+#: (``tables.session_pin``) derives it once: lineage-backed persist
+#: (evicted blocks recompute, never wrong). Size law
 #: (SCALING.md): |e| = distinct (custkey, suppkey) pairs ≤ min(|lineitem|,
 #: |customer|·|supplier|) — the domain product saturates at scale, so the
-#: pin is a reduced aggregate, not a data copy. Attributed in bench.py's
-#: PINNED_FAMILIES as ``purchase_edges``.
-_PURCHASE_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: pin is a reduced aggregate, not a data copy.
 def _purchase_edges_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (c=o_custkey, s=l_suppkey) purchase edges, session-pinned."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PURCHASE_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _PURCHASE_EDGE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_PURCHASE_EDGE_CACHE):
-            try:
-                _PURCHASE_EDGE_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
+
+    def build() -> DataFrame:
         orders = load_table(spark, sf_dir, "orders")
         li = load_table(spark, sf_dir, "lineitem")
-        df = (
+        return (
             orders.join(li, li.l_orderkey == orders.o_orderkey)
             .select(
                 F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
@@ -713,8 +681,8 @@ def _purchase_edges_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .persist()
         )
-        _PURCHASE_EDGE_CACHE[key] = df
-        return df
+
+    return session_pin(spark, sf_dir, "purchase_edges", build)
 
 
 @register(

@@ -21,12 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_processor_spark.engine import PIN_LOCK, register
+from hive_processor_spark.engine import register
 from hive_processor_spark.functions.exact import dsum, sql_dsum
 from hive_processor_spark.functions.orderstat import with_global_order
-from hive_processor_spark.sources.tables import load_table
+from hive_processor_spark.sources.tables import load_table, session_pin
 
-#: LRU-1 session pin for the exact daily-revenue spine ``(day, x)`` —
+#: Session pin for the exact daily-revenue spine ``(day, x)`` —
 #: x = Σ floor(o_totalprice·100) as DECIMAL(38,0) per order day. Five
 #: registered time-series tests share this identical frame
 #: (``ts_ljung_box``, ``ts_arch_lm``, ``stats_durbin_watson``,
@@ -34,27 +34,13 @@ from hive_processor_spark.sources.tables import load_table
 #: orders-sized rollup per run while everything downstream is |days|-row
 #: algebra (VERDICT r10 item 4 — the sweep doubling was the repeated
 #: spine scan). Answer-shaped: one row per day, never orders-sized.
-#: Same lineage-backed single-entry discipline as the other pins.
-_DAILY_REV_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: Lineage-backed; key, eviction and counters: ``tables.session_pin``.
 def daily_revenue_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-pinned exact daily-revenue spine ``(day, x)``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DAILY_REV_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _DAILY_REV_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_DAILY_REV_CACHE):
-            try:
-                _DAILY_REV_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
+
+    def build() -> DataFrame:
         orders = load_table(spark, sf_dir, "orders")
-        df = (
+        return (
             orders.groupBy(F.col("o_orderdate").cast("date").alias("day"))
             .agg(
                 F.sum(
@@ -65,8 +51,8 @@ def daily_revenue_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist()
         )
-        _DAILY_REV_CACHE[key] = df
-        return df
+
+    return session_pin(spark, sf_dir, "daily_revenue", build)
 
 
 @register(

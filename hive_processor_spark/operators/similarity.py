@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_processor_spark.engine import PIN_LOCK, register
+from hive_processor_spark.engine import register
 from hive_processor_spark.functions.vector import (
     SQL_SQ_NORM_Q,
     cosine_q,
@@ -36,7 +36,7 @@ from hive_processor_spark.functions.vector import (
     sq_norm_q,
     sql_cosine_q,
 )
-from hive_processor_spark.sources.tables import load_table
+from hive_processor_spark.sources.tables import load_table, session_pin
 
 
 def _pair_sims_block(
@@ -346,33 +346,17 @@ def _knn_candidates_block(
 #: ``embed_neardup``, ``dedup_cluster`` and ``graph_cc_size_dist`` all
 #: consume the identical (vec_a, vec_b, sim) frame; without a shared
 #: handle a full registry sweep re-runs the block pair kernel once per
-#: consumer (round-7 verdict item 4). Same LRU-1 discipline as the graph
-#: family's ``_knn_edges_pinned``: bounding the cache to a single entry —
-#: unpersisting the previous pin on replacement — caps the pinned
-#: footprint at one pair frame AND lets consecutive dedup queries in the
-#: same sweep reuse the materialization for free. Lineage-backed persist,
-#: so an evicted block is recomputed, never wrong.
-_NEARDUP_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: consumer (round-7 verdict item 4). As a session pin
+#: (``tables.session_pin``), consecutive dedup queries in the same sweep
+#: reuse the materialization for free. Lineage-backed persist, so an
+#: evicted block is recomputed, never wrong.
 def neardup_pairs_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact 0.4-cosine near-dup pair frame ``(vec_a, vec_b, sim)``,
     rounded to 4 digits and thresholded — session-pinned for reuse."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _NEARDUP_PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _NEARDUP_PAIR_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_NEARDUP_PAIR_CACHE):
-            try:
-                _NEARDUP_PAIR_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
+
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
-        df = (
+        return (
             _pair_sims_block(spark, emb, raw_min_sim=0.4 - 1e-4)
             .select(
                 "vec_a", "vec_b", F.round(F.col("sim_raw"), 4).alias("sim")
@@ -380,8 +364,8 @@ def neardup_pairs_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("sim") >= 0.4)
             .persist()
         )
-        _NEARDUP_PAIR_CACHE[key] = df
-        return df
+
+    return session_pin(spark, sf_dir, "neardup_pairs", build)
 
 
 @register(
@@ -625,7 +609,7 @@ _SIGNS_SQL_EXPR = (
 )
 
 
-#: LRU-1 session pin for the ANN signature plane (round-10, VERDICT r9
+#: Session pins for the ANN signature plane (round-10, VERDICT r9
 #: items 1-2): the round-9 Tier-H promotion made the signatures
 #: engine-mirrorable (the ``_ANN_SIGNS`` literal table + quantized-norm
 #: unit vectors) but re-evaluated the 8×64 literal-array expression per
@@ -633,50 +617,25 @@ _SIGNS_SQL_EXPR = (
 #: 1.86 → 2.41 s on ``sim_ann_pq``. The signature/codebook frames are
 #: pure functions of (fixture, constants), so they are built ONCE per
 #: (session, sf_dir) and shared across ``sim_ann_join`` /
-#: ``sim_ann_lsh`` / ``sim_ann_pq`` — the same lineage-backed LRU-1
-#: discipline as :func:`neardup_pairs_pinned` and the graph family's
-#: ``_knn_edges_pinned``: one bundle pinned at a time, the previous
-#: bundle's frames unpersisted on replacement, eviction recomputes from
-#: lineage (never wrong). Hot-path cost drops to the bucket kernel /
+#: ``sim_ann_lsh`` / ``sim_ann_pq`` — one ``"ann_plane"`` pin per frame
+#: name (``tables.session_pin``), lineage-backed: eviction recomputes
+#: (never wrong). Hot-path cost drops to the bucket kernel /
 #: ADC shortlist — the part that actually depends on the query.
-_ANN_PLANE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
-def ann_plane_pinned(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The (session, fixture)-pinned ANN plane bundle. Entries are added
-    lazily via :func:`ann_plane_frame`; keys in use: ``grp`` (clone
+def ann_plane_pinned(spark: SparkSession, sf_dir: str) -> tuple:
+    """Handle on the (session, fixture)-pinned ANN plane. Frames are
+    built lazily via :func:`ann_plane_frame`; names in use: ``grp`` (clone
     collapse), ``sig_unit`` (banded unit-vector signatures for
     ``sim_ann_join``), ``sig_raw`` (E2LSH raw-vector signatures for
     ``sim_ann_lsh``), ``pq_books`` / ``pq_codes`` (``sim_ann_pq``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ANN_PLANE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _ANN_PLANE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_ANN_PLANE_CACHE):
-            for df in _ANN_PLANE_CACHE.pop(k).values():
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # stale session handle — nothing left to release
-        bundle: dict[str, DataFrame] = {}
-        _ANN_PLANE_CACHE[key] = bundle
-        return bundle
+    return spark, sf_dir
 
 
-def ann_plane_frame(bundle: dict, name: str, build) -> DataFrame:
-    """Fetch-or-build one pinned frame of the ANN plane bundle."""
-    df = bundle.get(name)
-    if df is None:
-        with PIN_LOCK:
-            df = bundle.get(name)
-            if df is None:
-                df = build().persist()
-                bundle[name] = df
-    return df
+def ann_plane_frame(plane: tuple, name: str, build) -> DataFrame:
+    """Fetch-or-build one pinned frame of the ANN plane."""
+    spark, sf_dir = plane
+    return session_pin(
+        spark, sf_dir, "ann_plane", lambda: build().persist(), name
+    )
 
 
 def _ann_sig_cte() -> str:
@@ -1032,43 +991,24 @@ def sim_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross.unionByName(within)
 
 
-#: (applicationId, sf_dir) → prepared cell-partitioned layout path.
-#: SESSION-scoped by construction (r12; r11 verdict "What's wrong" #4):
-#: the path carries the applicationId, so a fresh process always rebuilds
-#: the layout from the parquet inputs — no intermediate keyed on the
-#: fixture dir ever survives across runs. Same discipline as every
-#: in-memory pin, applied to the one disk-backed layout.
-_IVF_LAYOUT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def ivf_prepare(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session) the cell-partitioned layout IVF probes read.
 
     This is the index-build half of IVF, separated from the probe path: at
     100 TB the partitioned rewrite is a one-time batch job (hours), while
     probes are interactive — an operator that rebuilds the layout per query
-    would be wrong by construction. Keyed by (applicationId, sf_dir): the
-    first probe of a session pays the build, every later probe reads the
-    layout; nothing is reused across processes.
+    would be wrong by construction. The layout is
+    ``roundtrip._prepare_partitioned``'s: keyed on the applicationId and
+    the embeddings file's fingerprint, published atomically, so the first
+    probe of a session pays the build, every later probe reads the layout,
+    a rewritten input gets a fresh one and nothing is reused across
+    processes.
     """
-    import hashlib
-    import os
+    from hive_processor_spark.sources.roundtrip import _prepare_partitioned
 
-    from hive_processor_spark.sources.roundtrip import _SCRATCH_ROOT
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _IVF_LAYOUT_CACHE.get(key)
-    if path is None:
-        os.makedirs(_SCRATCH_ROOT, exist_ok=True)
-        digest = hashlib.md5(
-            f"{key[0]}:{sf_dir}".encode()
-        ).hexdigest()[:12]
-        path = os.path.join(_SCRATCH_ROOT, f"ivf-layout-{digest}")
-        load_table(spark, sf_dir, "embeddings").write.mode(
-            "overwrite"
-        ).partitionBy("label").parquet(path)
-        _IVF_LAYOUT_CACHE[key] = path
-    return path
+    return _prepare_partitioned(
+        spark, sf_dir, "embeddings", "label", "ivf-layout"
+    )
 
 
 @register(
@@ -3036,33 +2976,18 @@ def embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: LRU-1 session pin for the corpus 10-NN list ``(i, j, d)`` consumed by
+#: Session pin for the corpus 10-NN list ``(i, j, d)`` consumed by
 #: ``profile_lof_outliers`` (round-11, VERDICT r10 item 3): the list was
 #: rebuilt through a per-run eager localCheckpoint — the full block pair
 #: kernel plus the per-point top-10 window, ~1.5 s of the query's 2.4 s
 #: quiet time at sf0.1 — while the downstream reach/lrd/LOF algebra is
-#: the only part that is per-run. Same lineage-backed single-entry
-#: discipline as the cosine/ANN/n-gram planes; size law is answer-shaped
-#: (10 rows per point, never corpus²).
-_LOF_KNN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: the only part that is per-run. Lineage-backed (``tables.session_pin``);
+#: size law is answer-shaped (10 rows per point, never corpus²).
 def lof_knn_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-pinned exact 10-NN list ``(i, j, d)`` over quantized cosine
     distance, both directions of each block-kernel pair considered."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LOF_KNN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _LOF_KNN_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_LOF_KNN_CACHE):
-            try:
-                _LOF_KNN_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
+
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         # Round-11 opt pass: two-level exact top-10 — per-block top-10
         # candidates selected in-kernel by the SAME (1−sim, j) order this
@@ -3072,14 +2997,14 @@ def lof_knn_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = _knn_candidates_block(spark, emb, 10, by_distance=True)
         sym = cand.select("i", "j", (1 - F.col("sim_raw")).alias("d"))
         w = Window.partitionBy("i").orderBy("d", "j")
-        df = (
+        return (
             sym.select("i", "j", "d", F.row_number().over(w).alias("rn"))
             .filter(F.col("rn") <= 10)
             .select("i", "j", "d")
             .persist()
         )
-        _LOF_KNN_CACHE[key] = df
-        return df
+
+    return session_pin(spark, sf_dir, "lof_knn", build)
 
 
 @register(

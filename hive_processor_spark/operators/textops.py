@@ -10,9 +10,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_processor_spark.engine import PIN_LOCK, register
+from hive_processor_spark.engine import register
 from hive_processor_spark.functions.textexpr import guarded_fanout, ngram_join
-from hive_processor_spark.sources.tables import load_table
+from hive_processor_spark.sources.tables import load_table, session_pin
 
 def _words() -> Column:
     """Token array (built lazily — Column construction needs a live session)."""
@@ -1124,35 +1124,22 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: LRU-1 session pin for the bigram-perplexity scored frame (round-10,
+#: Session pin for the bigram-perplexity scored frame (round-10,
 #: VERDICT r9 item 3): two registered consumers share the identical
 #: (doc_id, n_bigrams, avg_bits) frame — ``text_bigram_perplexity`` and
 #: ``pipeline_perplexity_buckets`` — and its lineage carries the whole
-#: bigram scoring join tree (~1.1 s/scan at sf0.1). Same lineage-backed
-#: single-entry discipline as the cosine/n-gram/simhash/ANN planes.
-_BIGRAM_PPL_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+#: bigram scoring join tree (~1.1 s/scan at sf0.1). Lineage-backed; key,
+#: eviction and counters: ``tables.session_pin``.
 def bigram_ppl_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-pinned per-document bigram cross-entropy frame
     ``(doc_id, n_bigrams, avg_bits)`` — the shared input of the
     perplexity-filter family."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BIGRAM_PPL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with PIN_LOCK:
-        hit = _BIGRAM_PPL_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in list(_BIGRAM_PPL_CACHE):
-            try:
-                _BIGRAM_PPL_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # stale session handle — nothing left to release
-        df = _bigram_ppl_frame(spark, sf_dir).persist()
-        _BIGRAM_PPL_CACHE[key] = df
-        return df
+    return session_pin(
+        spark,
+        sf_dir,
+        "bigram_ppl",
+        lambda: _bigram_ppl_frame(spark, sf_dir).persist(),
+    )
 
 
 _BIGRAM_PPL_SQL = """

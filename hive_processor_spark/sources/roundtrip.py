@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_processor_spark.engine import PINNED_SF_DIR, register
-from hive_processor_spark.sources.tables import load_table, read_parquet_cached
+from hive_processor_spark.sources.tables import (
+    _fingerprint,
+    load_table,
+    read_parquet_cached,
+)
 
 _SCRATCH_ROOT = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/hive_spark_scratch")
 
@@ -34,27 +38,24 @@ def _prepare_partitioned(
     spark: SparkSession, sf_dir: str, table: str, part_col: str, tag: str
 ) -> str:
     """Prepare-once partitioned layout with an ATOMIC publish (ADVICE r5
-    #3): the cache key folds in the source fixture's mtime+size
-    fingerprint (a regenerated fixture gets a fresh layout instead of a
+    #3): the cache key folds in the source table's ``tables._fingerprint``
+    (a regenerated or rewritten fixture gets a fresh layout instead of a
     stale hit), and the write lands in a unique temp dir that is RENAMED
     into place — two concurrent first requests each build their own temp
     and exactly one rename wins; the loser discards its copy and reads
     the winner's. No reader can ever observe a half-written layout.
 
-    SESSION-scoped (r12, same discipline as ``ivf_prepare``): the digest
-    folds in the applicationId, so every fresh process rebuilds its
-    layouts from the parquet inputs — no intermediate keyed only on the
-    fixture dir survives across runs."""
+    SESSION-scoped (r12): the digest folds in the applicationId, so every
+    fresh process rebuilds its layouts from the parquet inputs — no
+    intermediate keyed only on the fixture dir survives across runs."""
     import hashlib
     import shutil
     import uuid
 
-    src = os.path.join(sf_dir, f"{table}.parquet")
     try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}-{st.st_size}"
+        fp = _fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:
-        fp = "0"
+        fp = None
     app_id = spark.sparkContext.applicationId
     digest = hashlib.md5(f"{app_id}:{sf_dir}:{fp}".encode()).hexdigest()[:12]
     path = os.path.join(_SCRATCH_ROOT, f"{tag}-{digest}")
@@ -347,7 +348,7 @@ def scan_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the price predicate pushed separately into the surviving files' row
     groups. Partition-column pruning is THE first-order I/O lever on a
     100 TB date/tenant-partitioned table. Layout build is prepare-once
-    (keyed marker, same discipline as ivf_prepare); the published layout
+    (keyed marker, shared with ivf_prepare); the published layout
     is immutable, so its read is resolved once per session."""
     path = _prepare_partitioned(
         spark, sf_dir, "orders", "o_orderstatus", "part-orders"

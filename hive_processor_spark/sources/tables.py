@@ -41,13 +41,13 @@ from hive_processor_spark.engine import TABLES, ensure_session_confs
 #: immutable values, so a resolved plan is reusable for as long as its
 #: input is provably unchanged: the key folds in a fingerprint of the
 #: input (a file's inode, size and mtime_ns; a directory's sorted
-#: top-level (name, inode, size, mtime_ns) entries — the same
-#: mtime+size rule ``roundtrip._prepare_partitioned`` digests its layouts
-#: by). A file rewritten or replaced in place changes its fingerprint and
-#: is re-resolved; the stale entry is dropped on that insert. The
-#: applicationId keeps DataFrames bound to a stopped SparkContext from
-#: ever being served, and every insert evicts other applications' entries,
-#: so the cache holds no py4j refs into a dead JVM.
+#: top-level (name, inode, size, mtime_ns) entries — the package's one
+#: fingerprint rule: session pins and ``roundtrip._prepare_partitioned``
+#: layouts key on it too). A file rewritten or replaced in place changes
+#: its fingerprint and is re-resolved; the stale entry is dropped on that
+#: insert. The applicationId keeps DataFrames bound to a stopped
+#: SparkContext from ever being served, and every insert evicts other
+#: applications' entries, so the cache holds no py4j refs into a dead JVM.
 _TABLE_CACHE: dict[tuple[str, str, tuple], DataFrame] = {}
 #: Serializes evict-then-insert across serving threads; lookups stay
 #: lock-free (a racing miss only resolves the same plan twice).
@@ -118,6 +118,107 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_cached(
         spark, f"{sf_dir}/{name}.parquet", lambda df: _normalize(df, name)
     )
+
+
+#: family -> {(applicationId, sf_dir, fixture fingerprint, args): value} —
+#: the session pins (see :func:`session_pin`).
+_PINS: dict[str, dict[tuple, object]] = {}
+_PIN_LOCKS: dict[str, threading.RLock] = {}
+_PIN_COUNTS: dict[str, dict[str, int]] = {}
+#: Guards the counter increments only; never held while a pin builds.
+_COUNT_LOCK = threading.Lock()
+
+
+def _fixture_fingerprint(sf_dir: str) -> tuple:
+    """Fingerprint of every fixture table under ``sf_dir`` (``None`` for a
+    missing one): a pin's build may read any of them, including frames a
+    caller loaded before handing the build its closure."""
+    fp = []
+    for name in TABLES:
+        try:
+            fp.append(_fingerprint(f"{sf_dir}/{name}.parquet"))
+        except OSError:
+            fp.append(None)
+    return tuple(fp)
+
+
+def _release(value: object) -> None:
+    """Unpersist every DataFrame in a pinned value (nested in a tuple,
+    list or dict too). Any other value — a disk path — only drops its
+    handle. Unpersisting a checkpoint-backed or uncached frame is a no-op;
+    a handle into a stopped session has nothing left to release."""
+    if isinstance(value, dict):
+        value = list(value.values())
+    if isinstance(value, (tuple, list)):
+        for v in value:
+            _release(v)
+    elif hasattr(value, "unpersist"):
+        try:
+            value.unpersist()
+        except Exception:
+            pass
+
+
+def session_pin(
+    spark: SparkSession, sf_dir: str, family: str, build: Callable, *args
+) -> object:
+    """``build()``, pinned for the session while the fixture is unchanged.
+
+    Every derived frame several registered queries share — an edge list, a
+    pair plane, a signature bundle, a replay layout — is a *session pin*:
+    built once, persisted (or checkpointed, or written to disk) by
+    ``build``, and served to every later caller.
+
+    * **Key:** ``(applicationId, normalized sf_dir, fixture fingerprint,
+      args)`` per ``family``. The fixture fingerprint is ``_fingerprint``
+      of every table in ``engine.TABLES`` under ``sf_dir``, so a table
+      rewritten or replaced in place (new inode, size or mtime) misses,
+      whichever table the build read. A new session never sees another
+      session's pins.
+    * **Lookup:** a hit takes no pin lock (only the counter's, which no
+      build holds). A miss takes the family's re-entrant lock and looks
+      again, so racing first calls build once; builds may call other
+      pins, including their own family.
+    * **Release before build:** on a miss, every entry of the family whose
+      ``(applicationId, sf_dir, fingerprint)`` differs from the new key is
+      released (:func:`_release`) *before* ``build()`` runs. That keeps one
+      fixture scope per family (entries of one scope with different
+      ``args`` coexist) and is what makes a rewrite safe: Spark's
+      CacheManager matches a ``persist()``ed plan by its plan, not by the
+      data's version, so persisting the rebuilt plan while the old one is
+      still cached would silently reuse the old blocks.
+    * **Counters:** builds and hits per family, read by :func:`pin_counts`.
+    """
+    sf_dir = os.path.normpath(sf_dir)
+    app_id = spark.sparkContext.applicationId
+    scope = (app_id, sf_dir, _fixture_fingerprint(sf_dir))
+    key = scope + (args,)
+    pins = _PINS.setdefault(family, {})
+    counts = _PIN_COUNTS.setdefault(family, {"builds": 0, "hits": 0})
+    hit = pins.get(key)
+    if hit is None:
+        with _PIN_LOCKS.setdefault(family, threading.RLock()):
+            hit = pins.get(key)
+            if hit is None:
+                for stale in [k for k in pins if k[:3] != scope]:
+                    _release(pins.pop(stale))
+                pins[key] = hit = build()
+                with _COUNT_LOCK:
+                    counts["builds"] += 1
+                return hit
+    with _COUNT_LOCK:
+        counts["hits"] += 1
+    return hit
+
+
+def pinned(family: str) -> dict[tuple, object]:
+    """Snapshot of one family's live pins, keyed as in :func:`session_pin`."""
+    return dict(_PINS.get(family, {}))
+
+
+def pin_counts() -> dict[str, dict[str, int]]:
+    """Builds and hits per pin family since the process started."""
+    return {fam: dict(c) for fam, c in _PIN_COUNTS.items()}
 
 
 #: (session id, applicationId) -> sf_dir most recently registered — makes

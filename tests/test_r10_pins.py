@@ -2,7 +2,7 @@
 
 The round introduced four new LRU-1 pins (ANN plane, bigram-perplexity
 frame, simhash class graph, shingle-array frame). These tests pin the
-cache CONTRACT — single entry, hit identity, eviction releases the old
+cache CONTRACT — one fixture scope, hit identity, eviction releases the old
 bundle, recompute-after-eviction stays correct — plus the two
 mathematical facts the promotions lean on: k-core confluence (one extra
 peel round is a no-op at the fixpoint, which is what makes the unrolled
@@ -12,32 +12,41 @@ peel round is a no-op at the fixpoint, which is what makes the unrolled
 from __future__ import annotations
 
 import math
+import os
 
 import pyspark.sql.functions as F
 
 from hive_processor_spark import queries
+from hive_processor_spark.sources.tables import pinned
 from tests.conftest import SF_DIR, SF_SMALL
 
 _QUERIES = queries()
 
 
+def _scopes(family: str) -> set[tuple[str, str]]:
+    """(applicationId, sf_dir) of every live pin of ``family``."""
+    return {k[:2] for k in pinned(family)}
+
+
 def test_ann_plane_pin_is_lru1_and_eviction_recomputes(spark):
     from hive_processor_spark.operators.similarity import (
-        _ANN_PLANE_CACHE,
+        ann_plane_frame,
         ann_plane_pinned,
     )
 
     first = _QUERIES["sim_ann_join"](spark, SF_SMALL).count()
-    bundle_small = ann_plane_pinned(spark, SF_SMALL)
-    assert ann_plane_pinned(spark, SF_SMALL) is bundle_small  # hit identity
-    old_frames = list(bundle_small.values())
-    assert old_frames, "pin bundle should hold the signature frames"
+    frames = pinned("ann_plane")
+    old_frames = list(frames.values())
+    assert old_frames, "pin plane should hold the signature frames"
+    grp = next(v for k, v in frames.items() if k[3] == ("grp",))
+    plane = ann_plane_pinned(spark, SF_SMALL)
+    assert ann_plane_frame(plane, "grp", None) is grp  # hit identity
 
-    # switching fixtures evicts: exactly one bundle stays cached and the
-    # evicted bundle's frames are unpersisted
+    # switching fixtures evicts: one fixture scope stays pinned and the
+    # evicted scope's frames are unpersisted
     _QUERIES["sim_ann_join"](spark, SF_DIR).count()
-    assert len(_ANN_PLANE_CACHE) == 1
-    assert (spark.sparkContext.applicationId, SF_DIR) in _ANN_PLANE_CACHE
+    app_id = spark.sparkContext.applicationId
+    assert _scopes("ann_plane") == {(app_id, os.path.normpath(SF_DIR))}
     for df in old_frames:
         assert not df.storageLevel.useMemory, "evicted frame still pinned"
 
@@ -46,16 +55,13 @@ def test_ann_plane_pin_is_lru1_and_eviction_recomputes(spark):
 
 
 def test_bigram_ppl_pin_hit_and_isolation(spark):
-    from hive_processor_spark.operators.textops import (
-        _BIGRAM_PPL_CACHE,
-        bigram_ppl_pinned,
-    )
+    from hive_processor_spark.operators.textops import bigram_ppl_pinned
 
     a = bigram_ppl_pinned(spark, SF_SMALL)
     assert bigram_ppl_pinned(spark, SF_SMALL) is a
     small_sum = a.agg(F.sum("n_bigrams")).head()[0]
     b = bigram_ppl_pinned(spark, SF_DIR)
-    assert len(_BIGRAM_PPL_CACHE) == 1, "LRU-1: old fixture entry evicted"
+    assert len(pinned("bigram_ppl")) == 1, "LRU-1: old fixture entry evicted"
     assert b is not a
     # eviction must not poison the other fixture: recompute matches
     assert (

@@ -1,30 +1,35 @@
-"""Round-11 pin contracts: the LOF 10-NN pin and the shared PIN_LOCK.
+"""Round-11 pin contracts: the LOF 10-NN pin, racing first calls, and
+no hand-rolled pin cache.
 
 ``profile_lof_outliers`` now consumes a session-pinned exact 10-NN list
 (VERDICT r10 item 3) instead of rebuilding it through a per-run eager
 localCheckpoint. Contract tested here: hit identity, LRU-1 eviction,
-k=10 per point, lineage-backed recompute, and — ADVICE r10 — every pin
-builder runs its build/evict section under ``engine.PIN_LOCK`` so two
-concurrent first calls cannot double-build or evict mid-build.
+k=10 per point, lineage-backed recompute, and — ADVICE r10 — concurrent
+first calls cannot double-build. Every pin goes through
+``sources.tables.session_pin``; a static guard keeps operator and
+streaming modules from growing their own cache dicts or locks again.
 """
 
 from __future__ import annotations
 
+import os
+import pathlib
+import re
+import shutil
 import threading
 
 import pyspark.sql.functions as F
 
+import hive_processor_spark
 from hive_processor_spark import queries
+from hive_processor_spark.sources.tables import pin_counts, pinned
 from tests.conftest import SF_DIR, SF_SMALL
 
 _QUERIES = queries()
 
 
 def test_lof_knn_pin_is_lru1_and_recomputes(spark):
-    from hive_processor_spark.operators.similarity import (
-        _LOF_KNN_CACHE,
-        lof_knn_pinned,
-    )
+    from hive_processor_spark.operators.similarity import lof_knn_pinned
 
     first = _QUERIES["profile_lof_outliers"](spark, SF_SMALL).collect()
     a = lof_knn_pinned(spark, SF_SMALL)
@@ -34,25 +39,26 @@ def test_lof_knn_pin_is_lru1_and_recomputes(spark):
     assert per_i == [10]
     # switching fixtures evicts down to one entry and unpins the old frame
     lof_knn_pinned(spark, SF_DIR)
-    assert len(_LOF_KNN_CACHE) == 1
-    assert (spark.sparkContext.applicationId, SF_DIR) in _LOF_KNN_CACHE
+    keys = list(pinned("lof_knn"))
+    assert len(keys) == 1
+    app_id = spark.sparkContext.applicationId
+    assert keys[0][:2] == (app_id, os.path.normpath(SF_DIR))
     assert not a.storageLevel.useMemory, "evicted 10-NN frame still pinned"
     # lineage-backed: recompute after eviction gives the same answer
     assert _QUERIES["profile_lof_outliers"](spark, SF_SMALL).collect() == first
 
 
-def test_concurrent_first_calls_build_once(spark):
-    """Two threads racing the first pin call must resolve to ONE frame
-    (double-checked locking under engine.PIN_LOCK)."""
-    from hive_processor_spark.operators.similarity import (
-        _LOF_KNN_CACHE,
-        lof_knn_pinned,
-    )
+def test_concurrent_first_calls_build_once(spark, tmp_path):
+    """Threads racing the first pin call of a fixture must resolve to ONE
+    frame (double-checked locking inside ``session_pin``)."""
+    from hive_processor_spark.operators.similarity import lof_knn_pinned
 
-    _LOF_KNN_CACHE.clear()
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf)  # a fixture no earlier call has pinned
+    builds = pin_counts().get("lof_knn", {}).get("builds", 0)
     out = []
     threads = [
-        threading.Thread(target=lambda: out.append(lof_knn_pinned(spark, SF_SMALL)))
+        threading.Thread(target=lambda: out.append(lof_knn_pinned(spark, sf)))
         for _ in range(4)
     ]
     for t in threads:
@@ -61,33 +67,23 @@ def test_concurrent_first_calls_build_once(spark):
         t.join()
     assert len(out) == 4
     assert all(df is out[0] for df in out), "concurrent first calls double-built"
-    assert len(_LOF_KNN_CACHE) == 1
+    assert pin_counts()["lof_knn"]["builds"] == builds + 1
+    assert len(pinned("lof_knn")) == 1
 
 
-def test_every_pin_builder_takes_the_lock():
-    """Static guard: each session-pin cache builder must reference
-    PIN_LOCK between its cache miss and its cache insert."""
-    import inspect
-
-    from hive_processor_spark.operators import dedup, graphs, similarity, textops
-
-    from hive_processor_spark.operators import regression
-
-    builders = [
-        similarity.neardup_pairs_pinned,
-        similarity.ann_plane_pinned,
-        similarity.ann_plane_frame,
-        similarity.lof_knn_pinned,
-        graphs._knn_edges_pinned,
-        textops.bigram_ppl_pinned,
-        dedup._neardup_labels_pinned,
-        dedup._simhash_pairs_pinned,
-        dedup._simhash_classes_pinned,
-        dedup._ngram_pairs_pinned,
-        dedup._ngram_labels_pinned,
-        dedup._ngram_groups_pinned,
-        regression.daily_revenue_pinned,
+def test_no_hand_rolled_pin_cache_or_lock():
+    """Static guard: no module under ``operators/`` or ``streaming/``
+    declares a module-level ``*_CACHE`` dict or uses a ``threading`` lock —
+    session state goes through ``sources.tables.session_pin``."""
+    root = pathlib.Path(hive_processor_spark.__file__).parent
+    rule = re.compile(
+        r"^(\w*_CACHE\s*[:=])|^\s*(import threading\b|from threading import)",
+        re.M,
+    )
+    bad = [
+        f"{path.relative_to(root)}: {m.group(0).strip()}"
+        for sub in ("operators", "streaming")
+        for path in sorted((root / sub).rglob("*.py"))
+        for m in rule.finditer(path.read_text())
     ]
-    for fn in builders:
-        src = inspect.getsource(fn)
-        assert "PIN_LOCK" in src, f"{fn.__qualname__} builds its pin unguarded"
+    assert not bad, bad
