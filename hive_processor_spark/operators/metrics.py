@@ -35,7 +35,10 @@ from hive_processor_spark.functions.normdist import (
     sql_norm_cdf,
     sql_norm_ppf,
 )
-from hive_processor_spark.functions.orderstat import with_global_order
+from hive_processor_spark.functions.orderstat import (
+    grouped_order_statistics,
+    with_global_order,
+)
 from hive_processor_spark.sources.tables import load_table
 
 
@@ -6195,19 +6198,20 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_yuen_trimmed_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yuen's trimmed-mean t-test (Yuen '74, 20% trim) on returned vs
     available line revenues — the robust alternative to
-    ``stats_welch_t`` when tails are heavy. Order statistics never
-    materialize per row: per group the count of copies inside the
-    trimmed rank window (g+1 .. n−g) is max(0, min(cum, n−g) −
-    max(cumprev, g)) on the distinct-value cumulative frame, so the
-    trimmed sum, the winsorized sum ts + g·(x₍g+1₎+x₍n−g₎), and the
-    winsorized sum of squares (128-bit — cents² sums pass 2⁶³ at
-    sf0.1) are all exact integers. The Yuen standard error d_i =
-    s²_w(n−1)/(h(h−1)) and Welch–Satterthwaite df then fold in plain
-    double algebra mirrored expression-for-expression in the oracle.
+    ``stats_welch_t`` when tails are heavy. The boundary order
+    statistics lo = x₍g+1₎ and hi = x₍n−g₎ come from
+    ``grouped_order_statistics``; clipping every value to [lo, hi] then
+    gives the winsorized sum Σclip = ts + g·(lo+hi) and sum of squares
+    Σclip² = tss + g·(lo²+hi²) (128-bit — cents² sums pass 2⁶³ at
+    sf0.1), so the trimmed sum ts and both moments are exact integers.
+    The Yuen standard error d_i = s²_w(n−1)/(h(h−1)) and
+    Welch–Satterthwaite df then fold in plain double algebra mirrored
+    expression-for-expression in the oracle.
 
-    Scale: one shuffle to (sample, value) counts, windows over the
-    O(distinct) frame partitioned by sample — same demotion as
-    ``stats_mad_outliers``."""
+    Scale: the primitive's bucket pass and target-bucket slice (shuffle
+    ∝ bucket cells plus the target buckets' distinct values, no
+    per-value frame) plus one clipped map-side aggregate — three scans
+    of the filtered lineitem."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "A")
     )
@@ -6215,161 +6219,28 @@ def stats_yuen_trimmed_t(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("is_x"),
         F.floor(F.col("l_extendedprice") * 100.0).cast("long").alias("cents"),
     )
-    # Round-11 opt pass measured and rejected: hash-repartition before
-    # the (sample, value) aggregation + an eager checkpoint of the
-    # histogram (interleaved best-of-6: old 1.77 s, medicine 2.00 s).
-    # Round-12 opt pass: the blomqvist/winsorized bucket-probe machinery
-    # EXTENDED to rank-RANGE sums. The r11 shape built a near-unique
-    # (sample, cents) cumulative and sorted each sample's whole distinct
-    # domain through ONE window task; but the trimmed/winsorized moments
-    # only need (a) the two boundary order statistics and (b) the sum /
-    # sum-of-squares over ranks g+1..n−g — and rank ranges decompose over
-    # monotone buckets: buckets strictly between the two TARGET buckets
-    # contribute their full (Σcents, Σcents²) from the bucket pass, and
-    # only the ≤2 target buckets per sample need per-value refinement
-    # (the exact `inside` clip, applied with global ranks = bucket prefix
-    # + local cumulative). Two scans of the filtered lineitem, ≤2·4097
-    # bucket cells, no near-unique aggregation, no distinct-sized window.
-    # Same-window A/B + brute-force equality test in tests/test_r12_opt.py.
-    NB = 4096
-    WB = 2e7 / NB  # documented-superset domain: cents < 2e7 at every SF
-    braw = v.select(
+
+    def _g(n):
+        return F.floor(0.2 * n).cast("long")
+
+    # documented-superset domain: cents < 2e7 at every SF (OPTIMIZATION_r12.md)
+    th = grouped_order_statistics(
+        v.withColumn("c", F.lit(1)),
         "is_x",
         "cents",
-        F.least(
-            F.floor(F.col("cents").cast("double") / F.lit(WB)), F.lit(NB)
-        )
-        .cast("long")
-        .alias("b"),
+        "c",
+        {"lo": lambda n: _g(n) + 1, "hi": lambda n: n - _g(n)},
+        bounds={0: (0, 2e7), 1: (0, 2e7)},
     )
-    bhist = (
-        braw.groupBy("is_x", "b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("bc"),
-            F.sum("cents").cast("long").alias("bs"),
-            F.sum(
-                F.col("cents").cast("decimal(38,0)") * F.col("cents")
-            ).alias("bss"),
-        )
-        # ~2·4097 rows; the checkpoint keeps the probe and full-bucket
-        # consumers from re-scanning lineitem
-        .localCheckpoint(eager=True)
-    )
-    w_bprev = Window.partitionBy("is_x").orderBy("b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_ball = Window.partitionBy("is_x")
-    bcum = (
-        bhist.select(
-            "is_x",
-            "b",
-            "bc",
-            "bs",
-            "bss",
-            F.coalesce(F.sum("bc").over(w_bprev), F.lit(0)).alias("bprev"),
-            F.sum("bc").over(w_ball).alias("n"),
-        )
-        .withColumn("bcm", F.col("bprev") + F.col("bc"))
-        .withColumn("g", F.floor(0.2 * F.col("n")).cast("long"))
-    )
-    probe = bcum.groupBy("is_x").agg(
-        F.max("n").alias("n"),
-        F.max("g").alias("g"),
-        F.min(
-            F.when(F.col("bcm") >= F.col("g") + 1, F.col("b"))
-        ).alias("b_lo"),
-        F.min(
-            F.when(F.col("bcm") >= F.col("g") + 1, F.col("bprev"))
-        ).alias("p_lo"),
-        F.min(
-            F.when(F.col("bcm") >= F.col("n") - F.col("g"), F.col("b"))
-        ).alias("b_hi"),
-        F.min(
-            F.when(F.col("bcm") >= F.col("n") - F.col("g"), F.col("bprev"))
-        ).alias("p_hi"),
-    )
-    # buckets strictly between the targets lie entirely inside the rank
-    # window (b > b_lo ⇒ prefix ≥ cum(b_lo) ≥ g+1 > g; b < b_hi ⇒
-    # cum ≤ prefix(b_hi) ≤ n−g) — their full sums need no row detail
-    full = (
-        bcum.join(F.broadcast(probe), "is_x")
-        .filter((F.col("b") > F.col("b_lo")) & (F.col("b") < F.col("b_hi")))
-        .groupBy("is_x")
-        .agg(
-            F.sum("bs").cast("long").alias("f_ts"),
-            F.sum("bss").alias("f_tss"),
-        )
-    )
-    part = (
-        braw.join(F.broadcast(probe), "is_x")
-        .filter(
-            (F.col("b") == F.col("b_lo")) | (F.col("b") == F.col("b_hi"))
-        )
-        .groupBy(
-            "is_x", "b", "cents", "b_lo", "p_lo", "b_hi", "p_hi", "n", "g"
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    w_lprev = Window.partitionBy("is_x", "b").orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    loc = (
-        part.withColumn(
-            "lprev", F.coalesce(F.sum("c").over(w_lprev), F.lit(0))
-        )
-        .withColumn(
-            "p",
-            F.when(F.col("b") == F.col("b_lo"), F.col("p_lo")).otherwise(
-                F.col("p_hi")
-            ),
-        )
-        .withColumn("gprev", F.col("p") + F.col("lprev"))
-        .withColumn("gcum", F.col("p") + F.col("lprev") + F.col("c"))
-    )
-    inside = F.greatest(
-        F.lit(0),
-        F.least(F.col("gcum"), F.col("n") - F.col("g"))
-        - F.greatest(F.col("gprev"), F.col("g")),
-    )
-    pstats = loc.groupBy("is_x").agg(
-        F.sum(inside * F.col("cents")).cast("long").alias("p_ts"),
-        F.sum(
-            (inside * F.col("cents")).cast("decimal(38,0)") * F.col("cents")
-        ).alias("p_tss"),
-        F.min(
-            F.when(
-                (F.col("b") == F.col("b_lo"))
-                & (F.col("gcum") >= F.col("g") + 1),
-                F.col("cents"),
-            )
-        ).alias("lo"),
-        F.min(
-            F.when(
-                (F.col("b") == F.col("b_hi"))
-                & (F.col("gcum") >= F.col("n") - F.col("g")),
-                F.col("cents"),
-            )
-        ).alias("hi"),
-    )
+    clip = F.greatest(F.col("lo"), F.least(F.col("hi"), F.col("cents")))
     stats = (
-        probe.join(pstats, "is_x")
-        .join(full, "is_x", "left")
-        .select(
-            "is_x",
-            "n",
-            "g",
-            (F.coalesce(F.col("f_ts"), F.lit(0)) + F.col("p_ts"))
-            .cast("long")
-            .alias("ts"),
-            (
-                F.coalesce(
-                    F.col("f_tss"), F.lit(0).cast("decimal(38,0)")
-                )
-                + F.col("p_tss")
-            ).alias("tss"),
-            "lo",
-            "hi",
+        v.join(F.broadcast(th), "is_x")
+        .groupBy("is_x", "n", "lo", "hi")
+        .agg(
+            F.sum(clip).cast("long").alias("sw"),
+            F.sum(clip.cast("decimal(38,0)") * clip).alias("ssw"),
         )
+        .withColumn("g", _g(F.col("n")))
     )
     g_, n_ = F.col("g"), F.col("n")
     w = stats.select(
@@ -6377,17 +6248,14 @@ def stats_yuen_trimmed_t(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "g",
         (n_ - 2 * g_).alias("h"),
-        (F.col("ts").cast("double") / (n_ - 2 * g_)).alias("tmean"),
+        (
+            (F.col("sw") - g_ * (F.col("lo") + F.col("hi"))).cast("double")
+            / (n_ - 2 * g_)
+        ).alias("tmean"),
         (
             (
-                (
-                    F.col("tss")
-                    + g_.cast("decimal(38,0)") * F.col("lo") * F.col("lo")
-                    + g_.cast("decimal(38,0)") * F.col("hi") * F.col("hi")
-                ).cast("double")
-                - (F.col("ts") + g_ * (F.col("lo") + F.col("hi"))).cast("double")
-                * (F.col("ts") + g_ * (F.col("lo") + F.col("hi")))
-                / n_
+                F.col("ssw").cast("double")
+                - F.col("sw").cast("double") * F.col("sw") / n_
             )
             / (n_ - 1)
         ).alias("s2w"),
@@ -8586,130 +8454,48 @@ def stats_winsorized_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics — the robust association estimate that survives the
     heavy-tailed revenue outliers which leverage plain r (reported
     beside it from the SAME pass for the contrast). The clip
-    thresholds x₍g+1₎, x₍n−g₎ come off distinct-value cumulative
-    frames (the ``stats_yuen_trimmed_t`` machinery applied per
-    margin), broadcast back, and all ten clipped/raw moments fold as
-    exact integers (Σx² in 128-bit).
+    thresholds x₍g+1₎, x₍n−g₎ of both margins come from ONE
+    ``grouped_order_statistics`` call over the margin-tagged rows,
+    broadcast back, and all ten clipped/raw moments fold as exact
+    integers (Σx² in 128-bit).
 
-    Scale: two O(distinct) threshold frames + one clipped scan —
-    shuffle ∝ distinct values, the scan is map-only."""
+    Scale: the primitive's bucket pass and target-bucket slice over the
+    2n tagged rows (shuffle ∝ bucket cells plus the target buckets'
+    distinct values, no per-value frame) + one clipped scan, map-only up
+    to its 1-row aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
     v = li.select(
         F.floor(F.col("l_extendedprice") * 100.0).cast("long").alias("x"),
         F.col("l_quantity").cast("long").alias("y"),
     )
-    # Round-12 opt pass (r11 verdict item 4): the thresholds are FOUR
-    # order-statistic PROBES (ranks g+1 and n−g per margin) — they never
-    # needed the full per-distinct-value cumulative that the r11 shape
-    # built per margin (near-unique groupBy evaluated twice inside
-    # with_global_order, window over ~|distinct| rows). Probe-only
-    # two-pass instead, both margins sharing each pass via a 2-way
-    # margin-tag explode:
-    #   1. ONE scan → bucket histogram per margin (≤ 2·(NB+1) cells; the
-    #      grids are the r11 documented-superset domains: cents < 2e7,
-    #      quantity < 64 — monotone bucket id, so any superset is exact),
-    #      cumulated in a window over the tiny bucket frame; the target
-    #      bucket + its prefix count for each rank fold as conditional
-    #      aggregates (the D1 probe fold).
-    #   2. ONE scan filtered to the ≤ 4 target buckets (broadcast probe
-    #      row) → per-value counts inside those buckets only, tiny
-    #      cumulative, exact threshold value = min value with
-    #      prefix + within-bucket cum ≥ rank.
-    # Exact because the bucket id is monotone in the value: every value
-    # in a bucket before the target bucket has cum < rank, every value
-    # after is larger than the in-bucket answer. Shuffle ∝ bucket cells,
-    # not distinct values; no near-unique aggregation anywhere.
-    NB = 4096
-    WX = 2e7 / NB
-    WY = 64.0 / NB
-
-    def _b(col, w):
-        return F.least(
-            F.floor(F.col(col).cast("double") / F.lit(w)), F.lit(NB)
-        ).cast("long")
-
     tagged = v.select(
         F.explode(
             F.array(
-                F.struct(
-                    F.lit("x").alias("m"),
-                    _b("x", WX).alias("b"),
-                    F.col("x").alias("val"),
-                ),
-                F.struct(
-                    F.lit("y").alias("m"),
-                    _b("y", WY).alias("b"),
-                    F.col("y").alias("val"),
-                ),
+                F.struct(F.lit("x").alias("m"), F.col("x").alias("val")),
+                F.struct(F.lit("y").alias("m"), F.col("y").alias("val")),
             )
         ).alias("t")
-    ).select("t.m", "t.b", "t.val")
-    hist = tagged.groupBy("m", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    w_cum = (
-        Window.partitionBy("m")
-        .orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("m")
-    cum = hist.select(
+    ).select("t.m", "t.val", F.lit(1).alias("c"))
+
+    def _g(n):
+        return F.floor(0.1 * n).cast("long")
+
+    # documented-superset domains: cents < 2e7, quantity < 64
+    # (OPTIMIZATION_r12.md)
+    ths = grouped_order_statistics(
+        tagged,
         "m",
-        "b",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-    ).withColumn("g", F.floor(0.1 * F.col("n")).cast("long"))
-    # present buckets have cnt ≥ 1 ⇒ cum is strictly increasing in b, so
-    # the conditional MINs pick the FIRST qualifying bucket and its
-    # exclusive prefix (cum − cnt) consistently
-    probe = cum.groupBy("m").agg(
-        F.min(
-            F.when(F.col("cum") >= F.col("g") + 1, F.col("b"))
-        ).alias("b_lo"),
-        F.min(
-            F.when(F.col("cum") >= F.col("g") + 1, F.col("cum") - F.col("cnt"))
-        ).alias("p_lo"),
-        F.min(
-            F.when(F.col("cum") >= F.col("n") - F.col("g"), F.col("b"))
-        ).alias("b_hi"),
-        F.min(
-            F.when(
-                F.col("cum") >= F.col("n") - F.col("g"),
-                F.col("cum") - F.col("cnt"),
-            )
-        ).alias("p_hi"),
-        F.max("n").alias("n"),
-        F.max("g").alias("g"),
+        "val",
+        "c",
+        {"lo": lambda n: _g(n) + 1, "hi": lambda n: n - _g(n)},
+        bounds={"x": (0, 2e7), "y": (0, 64)},
     )
-    refined = (
-        tagged.join(F.broadcast(probe), "m")
-        .filter((F.col("b") == F.col("b_lo")) | (F.col("b") == F.col("b_hi")))
-        .groupBy(
-            "m", "b", "val", "b_lo", "p_lo", "b_hi", "p_hi", "n", "g"
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    w_loc = (
-        Window.partitionBy("m", "b")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    loc = refined.withColumn("lcum", F.sum("c").over(w_loc))
-    # all four thresholds fold into ONE 1-row aggregate (margin-
-    # conditional mins) — a per-margin groupBy followed by two filtered
-    # consumers would evaluate the whole probe subtree once per margin
-    lo_cond = (F.col("b") == F.col("b_lo")) & (
-        F.col("p_lo") + F.col("lcum") >= F.col("g") + 1
-    )
-    hi_cond = (F.col("b") == F.col("b_hi")) & (
-        F.col("p_hi") + F.col("lcum") >= F.col("n") - F.col("g")
-    )
-    th = loc.agg(
-        F.min(F.when((F.col("m") == "x") & lo_cond, F.col("val"))).alias("xlo"),
-        F.min(F.when((F.col("m") == "x") & hi_cond, F.col("val"))).alias("xhi"),
-        F.min(F.when((F.col("m") == "y") & lo_cond, F.col("val"))).alias("ylo"),
-        F.min(F.when((F.col("m") == "y") & hi_cond, F.col("val"))).alias("yhi"),
+    th = ths.agg(
+        *[
+            F.max(F.when(F.col("m") == m, F.col(k))).alias(m + k)
+            for m in ("x", "y")
+            for k in ("lo", "hi")
+        ]
     )
     clipped = v.crossJoin(F.broadcast(th)).select(
         F.greatest(F.col("xlo"), F.least(F.col("xhi"), F.col("x"))).alias("xw"),
@@ -16022,10 +15808,6 @@ def stats_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slice scan, shuffle ∝ bucket cells, no near-unique aggregation and
     # no value-distinct cumulative anywhere (in-session A/B in
     # OPTIMIZATION_r12.md).
-    from hive_processor_spark.functions.orderstat import (
-        grouped_order_statistics,
-    )
-
     tagged = v.select(
         F.explode(
             F.array(

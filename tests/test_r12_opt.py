@@ -146,10 +146,31 @@ def test_grouped_order_statistics_bounds_mode_equals_span_mode(spark):
     assert span == bounded
 
 
+def test_grouped_order_statistics_bounds_must_cover_every_group(spark):
+    """A group missing from `bounds` raises instead of borrowing another
+    group's bucket grid; the covered groups alone still answer."""
+    from hive_processor_spark.functions.orderstat import (
+        grouped_order_statistics,
+    )
+
+    hist = spark.createDataFrame(
+        [("a", 1, 1), ("a", 2, 1), ("b", 3, 1)], "g string, v long, c long"
+    )
+    ranks = {"hi": lambda n: n}
+    bounds = {"a": (0.0, 10.0)}
+    with pytest.raises(Exception, match="no bounds entry"):
+        grouped_order_statistics(hist, "g", "v", "c", ranks, bounds=bounds).collect()
+    covered = grouped_order_statistics(
+        hist.filter(F.col("g") == "a"), "g", "v", "c", ranks, bounds=bounds
+    ).collect()
+    assert [(r["g"], r["n"], r["hi"]) for r in covered] == [("a", 2, 2)]
+
+
 def test_yuen_bucket_range_sums_match_brute_force(spark):
-    """stats_yuen_trimmed_t's r12 bucket-decomposed rank-range sums must
-    reproduce the brute-force trimmed means exactly (20% trim, boundary
-    values at ranks g+1 and n−g, winsorized variance)."""
+    """stats_yuen_trimmed_t's clip identities (Σclip = ts + g·(lo+hi),
+    Σclip² = tss + g·(lo²+hi²) at the order statistics of ranks g+1 and
+    n−g) must reproduce the brute-force 20%-trimmed means, and the
+    winsorized variances behind t_yuen and df."""
     import numpy as np
 
     from hive_processor_spark import queries
@@ -167,15 +188,22 @@ def test_yuen_bucket_range_sums_match_brute_force(spark):
         n = len(xs)
         g = int(np.floor(0.2 * n))
         trim = xs[g : n - g]
-        return n, len(trim), trim.mean()
+        h = len(trim)
+        s2w = xs.clip(xs[g], xs[n - g - 1]).astype(np.float64).var(ddof=1)
+        return n, h, trim.mean(), s2w * (n - 1) / (h * (h - 1.0))
 
-    nx, hx, tmx = ref(1)
-    ny, hy, tmy = ref(0)
+    nx, hx, tmx, dx = ref(1)
+    ny, hy, tmy, dy = ref(0)
+    t_ref = (tmx - tmy) / np.sqrt(dx + dy)
+    df_ref = (dx + dy) ** 2 / (dx * dx / (hx - 1) + dy * dy / (hy - 1))
     row = queries()["stats_yuen_trimmed_t"](spark, SF_SMALL).collect()[0]
     assert (row["n_x"], row["h_x"]) == (nx, hx)
     assert (row["n_y"], row["h_y"]) == (ny, hy)
     assert abs(row["tmean_cents_x"] - round(tmx, 4)) < 1e-9
     assert abs(row["tmean_cents_y"] - round(tmy, 4)) < 1e-9
+    # rounded to 4 and 2 places; allow a rounding-edge flip
+    assert abs(row["t_yuen"] - t_ref) <= 1e-4
+    assert abs(row["df"] - df_ref) <= 1e-2
 
 
 def test_ranked_pairs_gate_uses_actual_pair_mass(spark):

@@ -3,7 +3,7 @@
 Hand-maintained operator counts drifted twice in round 3 (reconciled in two
 follow-up commits); a 570-query registry needs a generated index, not hand
 arithmetic. This emits one table row per registered query: id, defining
-module:line, tier (H = DuckDB-oracle hash-checked, R = rows-only), family
+path::qualname, tier (H = DuckDB-oracle hash-checked, R = rows-only), family
 (the defining module), and the first docstring sentence as a one-liner.
 
 Usage:
@@ -39,13 +39,11 @@ def _one_liner(fn) -> str:
 
 
 def _where(fn) -> str:
+    # path::qualname, not path:line — a line anchor goes stale on every
+    # edit above the operator
     mod = sys.modules[fn.__module__]
     rel = Path(mod.__file__).resolve().relative_to(OUT.parent)
-    try:
-        _, line = inspect.getsourcelines(fn)
-    except OSError:  # pragma: no cover
-        line = 0
-    return f"{rel}:{line}"
+    return f"{rel}::{fn.__qualname__}"
 
 
 def render() -> str:
