@@ -30,11 +30,6 @@ def dsum(c: Column | str, scale: int = 4) -> Column:
     return (F.sum(quantized).cast("double") / F.lit(float(10**scale))).alias("dsum")
 
 
-def davg(c: Column | str, scale: int = 4, round_to: int = 4) -> Column:
-    """Order-independent average: exact sum / count, rounded."""
-    return F.round(dsum(c, scale) / F.count(F.lit(1)), round_to)
-
-
 def sql_dsum(expr: str, scale: int = 4) -> str:
     """DuckDB oracle fragment equivalent to :func:`dsum`."""
     factor = float(10**scale)

@@ -18,14 +18,16 @@ discipline); k grows past broadcast size → IVF-style cell partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_processor_spark.engine import register
 from hive_processor_spark.functions.vector import (
     SQL_DOT_Q,
     SQL_SQ_NORM_Q,
+    centroid_vectors,
     dot_q,
+    sq_dist_q,
     sq_norm_q,
 )
 from hive_processor_spark.sources.tables import load_table
@@ -176,23 +178,6 @@ def _pq_subvectors(emb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_sqdist(a: Column, b: Column) -> Column:
-    """Quantized squared L2 between two subvectors (order-independent)."""
-    q = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.floor(
-            (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-            * F.lit(1e12)
-        ).cast("long"),
-    )
-    return (
-        F.aggregate(q, F.lit(0).cast("long"), lambda acc, x: acc + x).cast("double")
-        / F.lit(1e12)
-    )
-
-
 def _pq_codebooks(sub: DataFrame) -> DataFrame:
     """(s, k, centroid): per-subspace 16-entry codebook — seeds are the
     first 16 vectors' subvectors, refined by one quantized Lloyd step."""
@@ -200,7 +185,7 @@ def _pq_codebooks(sub: DataFrame) -> DataFrame:
         "s", F.col("vec_id").cast("int").alias("k"), F.col("sub").alias("centroid")
     )
     scored = sub.join(F.broadcast(seeds), "s").select(
-        "vec_id", "s", "sub", "k", _pq_sqdist(F.col("sub"), F.col("centroid")).alias("d")
+        "vec_id", "s", "sub", "k", sq_dist_q(F.col("sub"), F.col("centroid")).alias("d")
     )
     w = Window.partitionBy("vec_id", "s").orderBy("d", "k")
     assigned = (
@@ -227,7 +212,8 @@ def _pq_codebooks(sub: DataFrame) -> DataFrame:
 
 
 def _pq_sqd_sql(a: str, b: str, dims: int) -> str:
-    """DuckDB twin of :func:`_pq_sqdist` over ``dims``-element lists."""
+    """DuckDB twin of :func:`~hive_processor_spark.functions.vector.sq_dist_q`
+    over ``dims``-element lists."""
     return (
         f"(CAST(LIST_AGGREGATE(LIST_TRANSFORM(RANGE(1, {dims + 1}),"
         f" i -> CAST(FLOOR((CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
@@ -241,7 +227,7 @@ def _pq_sql() -> str:
     pipeline — subspace slicing, seed assignment, ONE quantized Lloyd
     recenter, encoding, the query's ADC table, the top-50 shortlist by
     summed subdistances, and the exact rerank — mirrored CTE-for-stage.
-    Every distance is the quantized integer-term sum of _pq_sqdist and
+    Every distance is the quantized integer-term sum of sq_dist_q and
     every mean is the floor(·1e9) decimal fold, so the codebooks (not
     just the final ranking) agree bit-for-bit. Stage CTEs are
     MATERIALIZED: inlining re-derives the codebook train per reference."""
@@ -350,7 +336,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "s",
             "k",
-            _pq_sqdist(F.col("sub"), F.col("centroid")).alias("d"),
+            sq_dist_q(F.col("sub"), F.col("centroid")).alias("d"),
         )
         w = Window.partitionBy("vec_id", "s").orderBy("d", "k")
         return (
@@ -368,7 +354,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     adc = (
         books.join(qsub, "s")
-        .select("s", "k", _pq_sqdist(F.col("qsub"), F.col("centroid")).alias("qd"))
+        .select("s", "k", sq_dist_q(F.col("qsub"), F.col("centroid")).alias("qd"))
     )
     shortlist = (
         codes.join(F.broadcast(adc), ["s", "k"])
@@ -394,7 +380,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qvec))
         .select(
             "vec_id",
-            F.round(_pq_sqdist(F.col("embedding"), F.col("qvec")), 6).alias(
+            F.round(sq_dist_q(F.col("embedding"), F.col("qvec")), 6).alias(
                 "exact_dist"
             ),
             F.round("approx_dist", 6).alias("approx_dist"),
@@ -609,36 +595,8 @@ def embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only distance pass — n·k work, no shuffle after the tiny
     centroid aggregate."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "label", F.posexplode("embedding").alias("pos0", "x")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias("m")
-    )
-    cvec = cent.groupBy(F.col("label").alias("lc")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s: s.getField("m"),
-        ).alias("cv")
-    )
-    d = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.col("cv"),
-                lambda x, c: F.floor(
-                    (x.cast("double") - c) * (x.cast("double") - c) * F.lit(1e12)
-                ).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + t,
-        ).cast("double")
-        / F.lit(1e12)
-    )
+    cvec = centroid_vectors(emb).toDF("lc", "cv")
+    d = F.sqrt(sq_dist_q(F.col("embedding"), F.col("cv")))
     dists = emb.crossJoin(F.broadcast(cvec)).select(
         "vec_id", "label", "lc", d.alias("d")
     )
@@ -741,22 +699,7 @@ def embed_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
 
     def dist(center_col: str):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.col(center_col),
-                    lambda x, c: F.floor(
-                        (x.cast("double") - c.cast("double"))
-                        * (x.cast("double") - c.cast("double"))
-                        * F.lit(1e12)
-                    ).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, t: acc + t,
-            ).cast("double")
-            / F.lit(1e12)
-        )
+        return F.sqrt(sq_dist_q(F.col("embedding"), F.col(center_col)))
 
     c1 = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("cemb")
@@ -873,48 +816,10 @@ def embed_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: n·dim map work under a k-centroid broadcast, one k-sized
     aggregate, a k² metadata grid — nothing grows superlinearly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "label", F.posexplode("embedding").alias("pos0", "x")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6))
-        .cast("long")
-        .alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias(
-            "m"
-        )
-    )
-    cvec = cent.groupBy(F.col("label").alias("lc")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s: s.getField("m"),
-        ).alias("cv")
-    )
-
-    def _sqdist(u, v):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    u,
-                    v,
-                    lambda x, c: F.floor(
-                        (x.cast("double") - c)
-                        * (x.cast("double") - c)
-                        * F.lit(1e12)
-                    ).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, t: acc + t,
-            ).cast("double")
-            / F.lit(1e12)
-        )
-
+    cvec = centroid_vectors(emb).toDF("lc", "cv")
     own = emb.join(
         F.broadcast(cvec), F.col("lc") == F.col("label")
-    ).select("label", _sqdist(F.col("embedding"), F.col("cv")).alias("d"))
+    ).select("label", F.sqrt(sq_dist_q(F.col("embedding"), F.col("cv"))).alias("d"))
     sig = own.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (
@@ -928,10 +833,7 @@ def embed_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     cd = a.join(b, F.col("la") != F.col("lb")).select(
         "la",
         "lb",
-        _sqdist(
-            F.col("cva").cast("array<double>"),
-            F.col("cvb").cast("array<double>"),
-        ).alias("dc"),
+        F.sqrt(sq_dist_q(F.col("cva"), F.col("cvb"))).alias("dc"),
     )
     sa = sig.select(
         F.col("label").alias("la"), F.col("sigma").alias("sig_a")

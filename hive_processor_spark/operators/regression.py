@@ -278,6 +278,27 @@ def ml_logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _labeler(tag: str, base: int, boost: int):
+    """Simulated binary annotator over ``documents``: votes 1 when the
+    ``md5(tag || doc_id)`` slot (0..99) is under ``base``, raised by
+    ``boost`` for documents of 300+ characters — the shared signal that
+    makes two labelers agree more than chance."""
+    slot = (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit(tag), F.col("doc_id").cast("string"))),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 100
+    )
+    thresh = F.lit(base) + F.when(F.col("n_chars") >= 300, boost).otherwise(0)
+    return F.when(slot < thresh, 1).otherwise(0)
+
+
 @register(
     "ml_cohens_kappa",
     """
@@ -314,25 +335,8 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically-parenthesized κ expression. One aggregation pass; at
     corpus scale this extends to per-annotator-pair grouping unchanged."""
     docs = load_table(spark, sf_dir, "documents")
-
-    def labeler(tag: str, base: int, boost: int):
-        slot = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(tag), F.col("doc_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        )
-        thresh = F.lit(base) + F.when(F.col("n_chars") >= 300, boost).otherwise(0)
-        return F.when(slot < thresh, 1).otherwise(0)
-
     labeled = docs.select(
-        labeler("a", 55, 20).alias("ra"), labeler("b", 50, 25).alias("rb")
+        _labeler("a", 55, 20).alias("ra"), _labeler("b", 50, 25).alias("rb")
     )
     c = labeled.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -3412,29 +3416,8 @@ def ml_kappa_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     single pass as ``ml_cohens_kappa``, counting the four cells instead
     of two margins."""
     docs = load_table(spark, sf_dir, "documents")
-
-    def labeler(tag: str, base: int, boost: int):
-        slot = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit(tag), F.col("doc_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        )
-        thresh = F.lit(base) + F.when(
-            F.col("n_chars") >= 300, boost
-        ).otherwise(0)
-        return F.when(slot < thresh, 1).otherwise(0)
-
     labeled = docs.select(
-        labeler("a", 55, 20).alias("ra"), labeler("b", 50, 25).alias("rb")
+        _labeler("a", 55, 20).alias("ra"), _labeler("b", 50, 25).alias("rb")
     )
     ra, rb = F.col("ra"), F.col("rb")
     c = labeled.agg(

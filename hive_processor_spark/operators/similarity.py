@@ -31,8 +31,10 @@ from pyspark.sql import functions as F
 from hive_processor_spark.engine import register
 from hive_processor_spark.functions.vector import (
     SQL_SQ_NORM_Q,
+    centroid_vectors,
     cosine_q,
     dot_q,
+    label_centroids,
     sq_norm_q,
     sql_cosine_q,
 )
@@ -451,17 +453,7 @@ def sim_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid L2 norms: posexplode → per-(label,dim) mean →
     re-aggregate. Both reductions are integer-quantized (shuffle-order
     independent)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "label", F.posexplode("embedding").alias("pos0", "x")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias("m")
-    )
+    cent = label_centroids(load_table(spark, sf_dir, "embeddings"))
     return cent.groupBy("label").agg(
         F.round(
             F.sqrt(
@@ -512,6 +504,37 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neardup_pairs_pinned(spark, sf_dir).select("vec_a", "vec_b", "sim")
 
 
+def _ivf_search(emb: DataFrame, cells: DataFrame, nprobe: int) -> DataFrame:
+    """Top-5 cosine neighbours of query vec 0 inside its ``nprobe`` nearest
+    coarse cells (label centroids by quantized cosine, ties on label).
+
+    ``cells`` is the table searched: ``emb`` itself, or the cell-partitioned
+    layout of :func:`ivf_prepare`, where the broadcast join against the
+    probe set lets dynamic partition pruning skip every other cell's files.
+    """
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+    probe = (
+        centroid_vectors(emb)
+        .crossJoin(F.broadcast(q))
+        .select(
+            "label",
+            F.round(cosine_q(F.col("q_emb"), F.col("centroid")), 4).alias("csim"),
+        )
+        .orderBy(F.desc("csim"), F.asc("label"))
+        .limit(nprobe)
+        .select("label")
+    )
+    sim = F.round(cosine_q(F.col("embedding"), F.col("q_emb")), 4)
+    return (
+        cells.join(F.broadcast(probe), "label")
+        .filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", F.col("label").cast("int").alias("label"), sim.alias("sim"))
+        .orderBy(F.desc("sim"), F.asc("vec_id"))
+        .limit(5)
+    )
+
+
 @register(
     "sim_ann_ivf",
     _CENTROID_CTE
@@ -541,41 +564,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the inner search is a partition-pruned scan (1/k of the data per
     probe), and ``nprobe`` generalizes to the top-n cells."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-
-    ex = emb.select("label", F.posexplode("embedding").alias("pos0", "x")).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias("m")
-    )
-    cvec = cent.groupBy("label").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("pos"), F.col("m")))
-        ).getField("m").alias("centroid")
-    )
-    probe = (
-        cvec.crossJoin(F.broadcast(q))
-        .select(
-            "label",
-            F.round(cosine_q(F.col("q_emb"), F.col("centroid")), 4).alias("csim"),
-        )
-        .orderBy(F.desc("csim"), F.asc("label"))
-        .limit(1)
-        .select("label")
-    )
-    sim = F.round(cosine_q(F.col("embedding"), F.col("q_emb")), 4)
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .join(F.broadcast(probe), "label")
-        .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", sim.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return _ivf_search(emb, emb, 1)
 
 
 #: Seeded Rademacher sign table for the random-projection signatures of
@@ -1043,41 +1032,7 @@ def sim_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-write behavior). Same answer as ``sim_ann_ivf``; the difference is
     I/O: 1/k of the corpus per probe instead of a full scan + filter."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cell_part = spark.read.parquet(ivf_prepare(spark, sf_dir))
-
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    ex = emb.select("label", F.posexplode("embedding").alias("pos0", "x")).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias("m")
-    )
-    cvec = cent.groupBy("label").agg(
-        F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m"))))
-        .getField("m")
-        .alias("centroid")
-    )
-    probe = (
-        cvec.crossJoin(F.broadcast(q))
-        .select(
-            "label",
-            F.round(cosine_q(F.col("q_emb"), F.col("centroid")), 4).alias("csim"),
-        )
-        .orderBy(F.desc("csim"), F.asc("label"))
-        .limit(1)
-        .select("label")
-    )
-    sim = F.round(cosine_q(F.col("embedding"), F.col("q_emb")), 4)
-    return (
-        cell_part.join(F.broadcast(probe), "label")  # → dynamic partition pruning
-        .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", F.col("label").cast("int").alias("label"), sim.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return _ivf_search(emb, spark.read.parquet(ivf_prepare(spark, sf_dir)), 1)
 
 
 @register(
@@ -1167,41 +1122,7 @@ def sim_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe set joins in as a 2-row broadcast, so the cell search stays
     partition-prunable on the cell-partitioned layout."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-
-    ex = emb.select("label", F.posexplode("embedding").alias("pos0", "x")).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias("m")
-    )
-    cvec = cent.groupBy("label").agg(
-        F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m"))))
-        .getField("m")
-        .alias("centroid")
-    )
-    probe = (
-        cvec.crossJoin(F.broadcast(q))
-        .select(
-            "label",
-            F.round(cosine_q(F.col("q_emb"), F.col("centroid")), 4).alias("csim"),
-        )
-        .orderBy(F.desc("csim"), F.asc("label"))
-        .limit(2)
-        .select("label")
-    )
-    sim = F.round(cosine_q(F.col("embedding"), F.col("q_emb")), 4)
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .join(F.broadcast(probe), "label")
-        .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", sim.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return _ivf_search(emb, emb, 2)
 
 
 @register(
@@ -1401,15 +1322,14 @@ def embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only fact-scale stage and it is a partial-final integer sum."""
     emb = load_table(spark, sf_dir, "embeddings")
     ex = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "label", "pos", F.col("xf").cast("double").alias("x"))
-    cent = ex.groupBy("label", "pos").agg(
-        (
-            F.sum(F.floor(F.col("x") * 1000000.0).cast("long")).cast("double")
-            / F.count(F.lit(1))
-            / 1000000.0
-        ).alias("m")
+        "vec_id", "label", F.posexplode("embedding").alias("pos0", "xf")
+    ).select(
+        "vec_id",
+        "label",
+        (F.col("pos0") + 1).cast("int").alias("pos"),
+        F.col("xf").cast("double").alias("x"),
     )
+    cent = label_centroids(emb)
     d = ex.join(F.broadcast(cent), ["label", "pos"]).select(
         "vec_id",
         "label",
@@ -2062,19 +1982,7 @@ def sim_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to `sim_ann_ivf`, so these stats describe exactly the index that
     operator searches."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select("label", F.posexplode("embedding").alias("pos0", "x")).select(
-        "label",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        F.floor(F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("q"),
-    )
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / F.lit(1e6)).alias("m")
-    )
-    cvec = cent.groupBy("label").agg(
-        F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m"))))
-        .getField("m")
-        .alias("centroid")
-    )
+    cvec = centroid_vectors(emb)
     scored = emb.join(F.broadcast(cvec), "label").select(
         "label", cosine_q(F.col("embedding"), F.col("centroid")).alias("sim")
     )

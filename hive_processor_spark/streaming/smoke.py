@@ -251,6 +251,27 @@ def stream_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
+def _watermarked_side(
+    spark: SparkSession, schema, path: str, event_type: str, alias: str
+) -> DataFrame:
+    """One side of the click/purchase stream-stream joins: the replayed
+    events of ``event_type``, one file per trigger, columns prefixed
+    ``{alias}_`` and a 2-hour watermark on ``{alias}_ts`` bounding the
+    join state."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{path}/*.parquet")
+        .filter(F.col("event_type") == event_type)
+        .select(
+            F.col("event_id").alias(f"{alias}_id"),
+            F.col("user_id").alias(f"{alias}_user"),
+            F.col("ts").alias(f"{alias}_ts"),
+        )
+        .withWatermark(f"{alias}_ts", "2 hours")
+    )
+
+
 @register("stream_stream_join")  # Tier R: streaming joins have no SQL oracle
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: click stream ⋈ purchase stream on
@@ -262,23 +283,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _replay_dir(spark, sf_dir)
     schema = ev.schema
     name = f"ssj_{uuid.uuid4().hex[:8]}"
-
-    def side(event_type: str, alias: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{path}/*.parquet")
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{alias}_id"),
-                F.col("user_id").alias(f"{alias}_user"),
-                F.col("ts").alias(f"{alias}_ts"),
-            )
-            .withWatermark(f"{alias}_ts", "2 hours")
-        )
-
-    clicks = side("click", "c")
-    purchases = side("purchase", "p")
+    clicks = _watermarked_side(spark, schema, path, "click", "c")
+    purchases = _watermarked_side(spark, schema, path, "purchase", "p")
     joined = clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))
@@ -677,23 +683,8 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _replay_dir(spark, sf_dir, n_chunks=LEFT_JOIN_CHUNKS)
     schema = ev.schema
     name = f"ssl_{uuid.uuid4().hex[:8]}"
-
-    def side(event_type: str, alias: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{path}/*.parquet")
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{alias}_id"),
-                F.col("user_id").alias(f"{alias}_user"),
-                F.col("ts").alias(f"{alias}_ts"),
-            )
-            .withWatermark(f"{alias}_ts", "2 hours")
-        )
-
-    clicks = side("click", "c")
-    purchases = side("purchase", "p")
+    clicks = _watermarked_side(spark, schema, path, "click", "c")
+    purchases = _watermarked_side(spark, schema, path, "purchase", "p")
     joined = clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))

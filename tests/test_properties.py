@@ -569,7 +569,7 @@ def test_pq_sqdist_metric_axioms(spark):
     and ~zero on identical vectors (within quantization)."""
     import numpy as np
 
-    from hive_processor_spark.operators.clustering import _pq_sqdist
+    from hive_processor_spark.functions.vector import sq_dist_q
 
     rng = np.random.default_rng(7)
     data = [
@@ -578,14 +578,49 @@ def test_pq_sqdist_metric_axioms(spark):
     ]
     df = spark.createDataFrame(data, "i int, a array<double>, b array<double>")
     out = df.select(
-        _pq_sqdist(F.col("a"), F.col("b")).alias("ab"),
-        _pq_sqdist(F.col("b"), F.col("a")).alias("ba"),
-        _pq_sqdist(F.col("a"), F.col("a")).alias("aa"),
+        sq_dist_q(F.col("a"), F.col("b")).alias("ab"),
+        sq_dist_q(F.col("b"), F.col("a")).alias("ba"),
+        sq_dist_q(F.col("a"), F.col("a")).alias("aa"),
     ).collect()
     for r in out:
         assert r.ab == r.ba  # bit-identical symmetry (same quantized terms)
         assert r.ab >= 0.0
         assert 0.0 <= r.aa < 1e-10
+
+
+def test_label_centroids_match_numpy(spark):
+    """label_centroids / centroid_vectors equal a numpy floor-quantized
+    per-label mean on a small repartitioned frame: negative elements make
+    floor (not truncation) matter, and the shuffle scrambles collect order,
+    so the centroid arrays must be ordered by the 1-based ``pos``."""
+    import numpy as np
+
+    from hive_processor_spark.functions.vector import (
+        centroid_vectors,
+        label_centroids,
+    )
+
+    rng = np.random.default_rng(11)
+    labels = np.arange(18) % 3
+    vecs = rng.normal(scale=1e-3, size=(18, 5)).astype(np.float32)
+    emb = spark.createDataFrame(
+        [(int(l), [float(x) for x in v]) for l, v in zip(labels, vecs)],
+        "label int, embedding array<float>",
+    ).repartition(4)
+
+    q = vecs.astype(np.float64) * 1e6
+    assert (np.floor(q) != np.trunc(q)).any()
+    expected = {}
+    for lab in range(3):
+        sel = np.floor(q[labels == lab]).astype(np.int64)
+        expected[lab] = [float(s) / len(sel) / 1e6 for s in sel.sum(axis=0)]
+
+    cells = {(r.label, r.pos): r.m for r in label_centroids(emb).collect()}
+    assert cells == {
+        (lab, p + 1): m for lab, ms in expected.items() for p, m in enumerate(ms)
+    }
+    vectors = {r.label: list(r.centroid) for r in centroid_vectors(emb).collect()}
+    assert vectors == expected
 
 
 def test_compress_ratio_semantics(spark):

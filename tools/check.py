@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 import traceback
@@ -124,7 +125,9 @@ def main() -> int:
     names = args.names or [
         n for n in qs if args.prefix is None or n.startswith(args.prefix)
     ]
-    spark = get_spark(shuffle_partitions=8)
+    spark = get_spark(
+        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
+    )
     con = duck_connect(args.sf)
 
     n_pass = n_fail = n_rowsonly = 0
