@@ -247,7 +247,9 @@ CLUSTER_CONF_100TB = {
 }
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def register(
+    name: str, oracle: str | None = None, *, writes: bool = False
+) -> Callable[[QueryFn], QueryFn]:
     """Register a named query (idiomatic heir of ``Processor.call``,
     reference ``src/processor.ts:57-59``; last registration wins there and
     here).
@@ -255,10 +257,17 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     ``oracle`` is the equivalent DuckDB SQL for the differential harness;
     omit it for Tier-R (rows-only) operators whose semantics DuckDB cannot
     reproduce exactly (approximate sketches, true streaming, ML-seeded LSH).
+
+    ``writes`` declares a handler whose every call has a side effect: a
+    ``_scratch()`` round-trip, a sink, or a streaming run. The serving door
+    never reuses a writer's prepared request (``serving.py``); a layout
+    published once by ``roundtrip._prepare_partitioned`` is not a write.
+    ``tests/test_serving.py`` checks the declarations over the registry.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         fn.query_name = name  # type: ignore[attr-defined]
+        fn.writes = writes  # type: ignore[attr-defined]
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle

@@ -184,7 +184,7 @@ class SynthStreamSource(DataSource):
 
 # Tier R: the micro-batch ingestion path isn't SQL-visible; equality with
 # the batch-generated frame is asserted in tests/test_streaming.py.
-@register("stream_python_datasource")
+@register("stream_python_datasource", writes=True)
 def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the custom STREAMING Python data source to completion with
     availableNow-style polling (2 micro-batches × 500 rows), collecting

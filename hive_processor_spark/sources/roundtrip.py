@@ -72,7 +72,7 @@ def _prepare_partitioned(
     return path
 
 
-@register("scan_csv_roundtrip", "SELECT * FROM nation")
+@register("scan_csv_roundtrip", "SELECT * FROM nation", writes=True)
 def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "nation")
     path = _scratch("csv")
@@ -82,7 +82,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.option("header", "true").schema(src.schema).csv(path)
 
 
-@register("scan_json_roundtrip", "SELECT * FROM supplier")
+@register("scan_json_roundtrip", "SELECT * FROM supplier", writes=True)
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "supplier")
     path = _scratch("json")
@@ -93,6 +93,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sink_parquet_roundtrip",
     "SELECT * FROM orders WHERE o_totalprice > 400000.0",
+    writes=True,
 )
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
@@ -101,7 +102,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-@register("scan_orc_roundtrip", "SELECT * FROM part")
+@register("scan_orc_roundtrip", "SELECT * FROM part", writes=True)
 def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink — the other columnar format Spark reads natively
     (vectorized, predicate pushdown), so a reference user with ORC data
@@ -119,6 +120,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     WHERE o.o_totalprice > 450000.0
     """,
+    writes=True,
 )
 def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed tables + co-located join — the shuffle-avoidance layout.
@@ -158,6 +160,7 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM orders GROUP BY o_orderstatus
     """,
+    writes=True,
 )
 def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned write, re-read, count per partition. The
@@ -181,6 +184,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n_nationkey, n_name, CAST(n_regionkey AS INT) AS n_extra
     FROM nation WHERE n_nationkey >= 10
     """,
+    writes=True,
 )
 def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on read: two parquet batches written at different
@@ -235,6 +239,7 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o.o_orderkey IS NULL
     ) merged
     """,
+    writes=True,
 )
 def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO semantics on plain parquet (no table format): a change
@@ -300,6 +305,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY o_orderstatus
     """,
+    writes=True,
 )
 def sink_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregation: persist PARTIAL aggregates (count +
@@ -414,6 +420,7 @@ def scan_tenant_prune(
     GROUP BY LENGTH(text)
     ORDER BY n_chars
     """,
+    writes=True,
 )
 def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plain-text source: write one document per line, read back with the
@@ -526,6 +533,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL SELECT 4, 'delta', 40
     ORDER BY id
     """,
+    writes=True,
 )
 def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Malformed-input robustness: a CSV with rows that cannot satisfy the
@@ -561,6 +569,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL SELECT 3, 'gamma', 3.5
     ORDER BY id
     """,
+    writes=True,
 )
 def scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Malformed-JSON robustness, the sibling of ``scan_csv_malformed``:
@@ -590,7 +599,7 @@ def scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tier R: file counts are an engine-side artifact the SQL oracle cannot
 # see; row preservation and the compaction guarantee are asserted in
 # tests/test_properties.py::test_compaction_preserves_rows.
-@register("sink_compact_small_files")
+@register("sink_compact_small_files", writes=True)
 def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction — the table-maintenance job every long-lived
     lake table needs: a fragmented write (64 tiny files here, standing in
@@ -635,7 +644,7 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("phase")
 
 
-@register("scan_corrupt_files", "SELECT * FROM nation")
+@register("scan_corrupt_files", "SELECT * FROM nation", writes=True)
 def scan_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupt-input resilience: a directory containing one garbage
     ``.parquet`` file among good ones is read with
@@ -667,6 +676,7 @@ def scan_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY n_nationkey, fmt
     """,
+    writes=True,
 )
 def scan_multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Federated-format ingestion: the same table written to CSV, JSON and
@@ -710,6 +720,7 @@ def scan_multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderpriority = '1-URGENT'
     ORDER BY o_orderpriority
     """,
+    writes=True,
 )
 def scan_insert_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite: a partitioned table has exactly ONE
@@ -758,6 +769,7 @@ def scan_insert_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFra
     FROM nation
     ORDER BY n_nationkey
     """,
+    writes=True,
 )
 def scan_csv_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV quoting torture: values containing the delimiter, embedded
@@ -788,7 +800,7 @@ def scan_csv_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("n_nationkey")
     )
 
-@register("scan_xml_roundtrip", "SELECT * FROM supplier")
+@register("scan_xml_roundtrip", "SELECT * FROM supplier", writes=True)
 def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML source/sink (Spark 4 native, no external package): write the
     supplier table as row-tagged XML, read it back with the source schema
@@ -849,7 +861,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("fname")
     )
 
-@register("scan_csv_gzip_roundtrip", "SELECT * FROM customer")
+@register("scan_csv_gzip_roundtrip", "SELECT * FROM customer", writes=True)
 def scan_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-text ingestion: write the customer table as gzip CSV,
     read it back with the source schema. Gzip text files are
@@ -873,6 +885,7 @@ def scan_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1 AS BIGINT) AS n_files
     FROM orders GROUP BY o_orderstatus ORDER BY part_value
     """,
+    writes=True,
 )
 def scan_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-level lineage via ``input_file_name()``: write orders
@@ -918,6 +931,7 @@ def scan_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.event_type
     ORDER BY e.event_type
     """,
+    writes=True,
 )
 def join_dpp_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the fact table is laid out partitioned
@@ -978,6 +992,7 @@ def join_dpp_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS DOUBLE) / 100.0 AS sum_price
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    writes=True,
 )
 def sink_partition_stats_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lakehouse manifest statistics: write the fact table partitioned,
@@ -1230,6 +1245,7 @@ def sink_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_nationkey + 1000 AS BIGINT) AS geo_id
     FROM nation ORDER BY name
     """,
+    writes=True,
 )
 def scan_nested_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested-schema projection pushdown: write a parquet layout where
@@ -1426,7 +1442,7 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, df.schema)
 
 
-@register("catalog_analyze_stats")
+@register("catalog_analyze_stats", writes=True)
 def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE COMPUTE STATISTICS audit: persist nation as a
     managed table, collect table- and column-level statistics, then
@@ -1500,6 +1516,7 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            1 AS all_files_within_cap
     FROM n
     """,
+    writes=True,
 )
 def sink_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``maxRecordsPerFile`` sink contract: customers are written
@@ -1546,6 +1563,7 @@ def sink_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents WHERE lang LIKE 'e%'
     GROUP BY lang ORDER BY lang
     """,
+    writes=True,
 )
 def scan_path_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-name-convention pruning on a NON-partitioned lake layout:

@@ -88,7 +88,7 @@ def _replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> tuple[st
     return session_pin(spark, sf_dir, "stream_replay", build, n_chunks), ev
 
 
-@register("stream_micro_batch")  # Tier R: the driver can't oracle a stream
+@register("stream_micro_batch", writes=True)  # Tier R: the driver can't oracle a stream
 def stream_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental tumbling-window count with a 1-hour watermark, replayed
     file-by-file; final (complete-mode) state must equal the batch answer —
@@ -116,7 +116,7 @@ def stream_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-@register("stream_late_data")  # Tier R
+@register("stream_late_data", writes=True)  # Tier R
 def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark drop semantics: four hourly batches, then a final batch
     containing one row arriving hours late into the hour-0 window. With a
@@ -171,7 +171,7 @@ def _running_count(key, pdf_iter, state: GroupState):
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
 
 
-@register("stream_stateful")  # Tier R
+@register("stream_stateful", writes=True)  # Tier R
 def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful streaming (applyInPandasWithState): per-user event
     counts accumulated across micro-batches, collected via foreachBatch
@@ -208,7 +208,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-@register("stream_dispatch")  # Tier R: a job stream has no SQL oracle
+@register("stream_dispatch", writes=True)  # Tier R: a job stream has no SQL oracle
 def stream_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's worker loop, Spark-native: a stream of job packets
     ``{job_id, cmd}`` dispatched per micro-batch through the Processor
@@ -272,7 +272,7 @@ def _watermarked_side(
     )
 
 
-@register("stream_stream_join")  # Tier R: streaming joins have no SQL oracle
+@register("stream_stream_join", writes=True)  # Tier R: streaming joins have no SQL oracle
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: click stream ⋈ purchase stream on
     user_id with the purchase within 1 hour after the click. Both sides
@@ -382,10 +382,10 @@ def stream_stateful_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 if _have_protobuf():  # pragma: no cover - protobuf absent in this container
-    register("stream_stateful_v2")(stream_stateful_v2)
+    register("stream_stateful_v2", writes=True)(stream_stateful_v2)
 
 
-@register("stream_static_join")  # Tier R: a stream has no SQL oracle
+@register("stream_static_join", writes=True)  # Tier R: a stream has no SQL oracle
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join — the dimension-lookup shape of every
     streaming ETL pipeline: the unbounded events stream joins the bounded
@@ -427,7 +427,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-@register("stream_cdc_apply")  # Tier R: streaming ingestion isn't SQL-visible
+@register("stream_cdc_apply", writes=True)  # Tier R: streaming ingestion isn't SQL-visible
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC materialization: the event change-log is replayed
     file-by-file and folded into per-key latest-wins state via
@@ -488,7 +488,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         final, "user_id bigint, final_value double, n_changes bigint"
     ).orderBy("user_id")
 
-@register("stream_session_window")  # Tier R: true-stream session windows
+@register("stream_session_window", writes=True)  # Tier R: true-stream session windows
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ``session_window`` on a TRUE stream: per-user sessions with a
     30-minute gap, built incrementally across file-by-file replay with a
@@ -545,7 +545,7 @@ def _hourly_file(spark: SparkSession, path: str, i: int, rows) -> None:
             os.utime(os.path.join(root, f), (now, now))
 
 
-@register("stream_checkpoint_restart")  # Tier R: recovery isn't SQL-visible
+@register("stream_checkpoint_restart", writes=True)  # Tier R: recovery isn't SQL-visible
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint-recovery semantics — the durability contract a 100 TB
     streaming pipeline actually relies on: a watermarked append-mode
@@ -610,7 +610,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket_start")
 
 
-@register("stream_watermark_lateness")  # Tier R: drop policy isn't SQL-visible
+@register("stream_watermark_lateness", writes=True)  # Tier R: drop policy isn't SQL-visible
 def stream_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-batch watermark discipline beyond the single late-row smoke:
     after four on-time hourly batches advance the watermark, one batch
@@ -662,7 +662,7 @@ def stream_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-@register("stream_stream_left_join")  # Tier R: outer-emission timing isn't SQL
+@register("stream_stream_left_join", writes=True)  # Tier R: outer-emission timing isn't SQL
 def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join — the subtle half of the
     streaming-join surface: clicks that never see a purchase within
@@ -708,7 +708,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-@register("stream_topk_merge")  # Tier R: a stream has no SQL oracle
+@register("stream_topk_merge", writes=True)  # Tier R: a stream has no SQL oracle
 def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch incremental top-k: each micro-batch pre-aggregates
     per-user quantized value totals (cents — exact integers, so the
@@ -752,7 +752,7 @@ def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("stream_dlq_route")  # Tier R: a stream has no SQL oracle
+@register("stream_dlq_route", writes=True)  # Tier R: a stream has no SQL oracle
 def stream_dlq_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter-queue routing in foreachBatch — the
     write-audit-publish pattern for streams: each micro-batch splits on

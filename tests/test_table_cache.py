@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as pq
@@ -128,3 +129,47 @@ def test_tenant_layout_read_once_and_tenants_isolated(
     assert a1 == expected("src3")
     assert b == expected("src11")
     assert a1 != b
+
+
+def test_racing_first_layout_builds_publish_one_layout(
+    spark, sf_copy, tmp_path, monkeypatch
+):
+    """Two first calls of ``_prepare_partitioned`` both miss and both write
+    (a barrier holds each until the other is past the ``_SUCCESS`` check):
+    one rename publishes, the loser's temp directory is removed, and both
+    callers get the published path."""
+    from hive_processor_spark import queries
+    from hive_processor_spark.sources import roundtrip
+
+    scratch = tmp_path / "scratch"
+    monkeypatch.setattr(roundtrip, "_SCRATCH_ROOT", str(scratch))
+    both_missed = threading.Barrier(2, timeout=60)
+
+    def load_after_both_missed(*args):
+        both_missed.wait()
+        return load_table(*args)
+
+    monkeypatch.setattr(roundtrip, "load_table", load_after_both_missed)
+
+    def prepare(_):
+        return roundtrip._prepare_partitioned(
+            spark, sf_copy, "documents", "source", "tenant-docs"
+        )
+
+    with ThreadPoolExecutor(2) as pool:
+        paths = list(pool.map(prepare, range(2)))
+    monkeypatch.setattr(roundtrip, "load_table", load_table)
+
+    assert paths[0] == paths[1]
+    assert not both_missed.broken
+    layouts = sorted(p.name for p in scratch.glob("tenant-docs-*"))
+    assert layouts == [os.path.basename(paths[0])]
+    assert (scratch / layouts[0] / "_SUCCESS").exists()
+    assert not list(scratch.glob("*.tmp-*"))
+
+    fn = queries()["scan_tenant_prune"]
+
+    def rows(sf_dir):
+        return fn(spark, sf_dir, ctx={"domain": "src3"}).collect()
+
+    assert rows(sf_copy) == rows(SF_SMALL)
