@@ -23,23 +23,32 @@ for the Spark engine without inheriting the reference's wire stack
   catch-and-reply, ``src/processor.ts:118-126``);
 * compression: a request body MAY be zlib-deflated; the server sniffs the
   0x78 leading byte and mirrors the request's encoding in its reply;
-* prepared requests: the server keeps the built ``df.limit(limit).toJSON()``
-  RDD of each eligible request and re-collects it on later calls, so a
-  repeated request skips the handler, the plan build and every map stage
-  whose shuffle output is still on disk. Key: ``(applicationId,
+* prepared requests: the server keeps the collected reply rows of each
+  eligible request and answers later calls from them, so a repeated
+  request runs neither the handler nor a Spark job. Key: ``(applicationId,
   normalized sf_dir, tables._fixture_fingerprint(sf_dir), query, ctx,
   limit)``, where ``ctx`` is the full dict serialized with ``sort_keys``
   when the handler accepts it, else ``None`` (so two tenants never share
   an entry). Eligible: the analyzed plan is ``deterministic`` and the
   handler is not a declared writer (``engine.register(..., writes=True)``:
   scratch round-trips, sinks, streaming runs); anything else runs fresh
-  on every call. Bound: the ``_PREPARED_MAX`` most recently used entries
-  per server; eviction and :meth:`QueryServer.stop` only drop the
-  reference, and Spark's ``ContextCleaner`` removes the shuffle files.
-  Invalidation: the same scope rule as ``tables.session_pin`` -- a table
-  rewritten or replaced in place changes the fingerprint, so the request
-  misses, and inserting its new entry drops the stale ones of that
-  ``sf_dir``; a re-collect that raises drops its entry and rebuilds once.
+  on every call. Bounds: at most ``_PREPARED_MAX`` entries and
+  ``_PREPARED_BYTES`` of kept reply JSON (the summed length of the
+  collected ``toJSON()`` strings) per server, least recently used evicted
+  first; a reply larger than the byte bound alone is answered but not
+  kept, and so is one that does not fit an envelope. No Spark state
+  (RDD, shuffle output, cache) is retained, so eviction and
+  :meth:`QueryServer.stop` free everything an entry holds. Invalidation:
+  the same scope rule as ``tables.session_pin`` -- a table rewritten or
+  replaced in place changes the fingerprint, so the request misses, and
+  a new build drops the stale entries of that ``sf_dir``. Scope limit: the
+  fingerprint covers the fixture tables under the request's ``sf_dir``
+  only; ``scan_binary_files`` reads ``PINNED_SF_DIR`` whatever ``sf_dir``
+  says, so its kept reply does not follow a rewrite of that directory.
+* envelope cap: ``_MAX_MSG`` bounds a message's wire length and, for a
+  compressed one, its inflated length; a body past it is refused and the
+  connection closed. A reply past it comes back as an error reply that
+  names a sink instead.
 
 Scale posture: this is a *control-plane* door, not a data plane — results
 stream back as JSON rows and are expected to be aggregates/top-k (the same
@@ -70,10 +79,13 @@ from hive_processor_spark.sources.tables import _fixture_fingerprint
 
 _LEN = struct.Struct(">I")
 _MAX_MSG = 64 * 1024 * 1024  # 64 MiB envelope cap — a control plane, not a sink
-#: Prepared requests one server keeps, least recently used evicted first.
-#: A request's shuffle output lives as long as its entry; perfbench's
-#: serve-light mix repeats 10 keys.
+#: Prepared requests one server keeps, least recently used evicted first;
+#: perfbench's serve-light mix repeats 10 keys.
 _PREPARED_MAX = 64
+#: Kept reply JSON per server, in characters of the collected ``toJSON()``
+#: strings. The decoded rows live in driver memory at about 7x that
+#: (``filter_compare``'s 1000-row reply: 104 kB of JSON, 728 kB decoded).
+_PREPARED_BYTES = 16 * 1024 * 1024
 
 
 def _recv_exact(conn: socket.socket, n: int) -> bytes | None:
@@ -99,15 +111,26 @@ def _read_msg(conn: socket.socket) -> tuple[dict, bool] | None:
         return None
     compressed = raw[:1] == b"\x78"  # zlib header sniff, reference-style
     if compressed:
-        raw = zlib.decompress(raw)
+        inflate = zlib.decompressobj()
+        raw = inflate.decompress(raw, _MAX_MSG + 1)
+        if len(raw) > _MAX_MSG or not inflate.eof:
+            raise ValueError(f"envelope truncated or inflating past {_MAX_MSG} bytes")
     return json.loads(raw.decode("utf-8")), compressed
 
 
-def _write_msg(conn: socket.socket, body: dict, compress: bool) -> None:
+def _encode(body: dict, compress: bool) -> bytes:
+    """One length-prefixed message; raises ``ValueError`` when the body is
+    longer than the receiver accepts, compressed or not."""
     raw = json.dumps(body, separators=(",", ":")).encode("utf-8")
+    if len(raw) > _MAX_MSG:
+        raise ValueError(f"envelope of {len(raw)} bytes exceeds {_MAX_MSG}")
     if compress:
         raw = zlib.compress(raw)
-    conn.sendall(_LEN.pack(len(raw)) + raw)
+    return _LEN.pack(len(raw)) + raw
+
+
+def _write_msg(conn: socket.socket, body: dict, compress: bool) -> None:
+    conn.sendall(_encode(body, compress))
 
 
 class QueryServer:
@@ -131,14 +154,15 @@ class QueryServer:
         self._thread = threading.Thread(
             target=self._serve, name="hps-query-server", daemon=True
         )
-        #: key -> the built ``toJSON()`` RDD of a prepared request.
-        self._prepared: OrderedDict[tuple, object] = OrderedDict()
-        #: Guards ``_prepared`` and the counters; never held while a
-        #: request builds or runs (under AQE ``toJSON()`` already runs the
-        #: map stages), so racing first calls of one key may both build.
+        #: key -> (reply rows, their JSON length) of a prepared request.
+        self._prepared: OrderedDict[tuple, tuple[list, int]] = OrderedDict()
+        self._prepared_bytes = 0  # Σ JSON length over ``_prepared``
+        #: Guards ``_prepared``, its byte total and the counters; never
+        #: held while a request builds or runs, so racing first calls of
+        #: one key may both build.
         self._prepared_lock = threading.Lock()
         self.hits = 0  # requests answered from a prepared request
-        self.builds = 0  # eligible requests built and kept
+        self.builds = 0  # eligible requests built (kept if they fit)
         self.ineligible = 0  # writer or nondeterministic requests, run fresh
 
     # -- lifecycle ---------------------------------------------------------
@@ -152,6 +176,7 @@ class QueryServer:
         self._sock.close()
         with self._prepared_lock:
             self._prepared.clear()
+            self._prepared_bytes = 0
 
     def __enter__(self) -> "QueryServer":
         return self.start()
@@ -192,9 +217,20 @@ class QueryServer:
                 return
             request, compressed = msg
             try:
-                _write_msg(conn, self._handle(request), compressed)
-            except OSError:  # the client hung up before its reply
+                conn.sendall(self._reply(request, compressed))
+            except (ValueError, OSError):  # unsendable, or the client hung up
                 return
+
+    def _reply(self, request: dict, compressed: bool) -> bytes:
+        """The encoded reply; one too large for an envelope becomes an
+        error reply and is not kept."""
+        reply = self._handle(request)
+        try:
+            return _encode(reply, compressed)
+        except ValueError as exc:
+            self._forget(reply.get("rows"))
+            error = f"ValueError: reply {exc}; use a sink for bulk output"
+            return _encode({"sn": reply["sn"], "ok": False, "error": error}, compressed)
 
     def _handle(self, request: dict) -> dict:
         sn = request.get("sn")
@@ -232,12 +268,12 @@ class QueryServer:
             df = fn(self._spark, sf_dir, ctx=ctx) if ctx else fn(self._spark, sf_dir)
             # toJSON keeps types self-describing (dates/timestamps/arrays)
             # without a hand-rolled serializer on either side.
-            return df, df.limit(limit).toJSON()
+            return df, df.limit(limit).toJSON().collect()
 
         if getattr(fn, "writes", False):
             with self._prepared_lock:
                 self.ineligible += 1
-            return _collect(build()[1])
+            return [json.loads(s) for s in build()[1]]
         norm_dir = os.path.normpath(sf_dir)
         scope = (
             self._spark.sparkContext.applicationId,
@@ -246,38 +282,46 @@ class QueryServer:
         )
         key = scope + (name, json.dumps(ctx, sort_keys=True) if ctx else None, limit)
         with self._prepared_lock:
-            rdd = self._prepared.get(key)
-            if rdd is not None:
+            kept = self._prepared.get(key)
+            if kept is not None:
                 self._prepared.move_to_end(key)
-        if rdd is not None:
-            try:
-                rows = _collect(rdd)
-            except Exception:
-                # What the plan reads can go away under it (a released
-                # checkpoint, a removed layout): drop the entry, rebuild once.
-                with self._prepared_lock:
-                    if self._prepared.get(key) is rdd:
-                        del self._prepared[key]
-            else:
-                with self._prepared_lock:
-                    self.hits += 1
-                return rows
-        df, rdd = build()
+                self.hits += 1
+                return kept[0]
+        df, lines = build()
         deterministic = df._jdf.queryExecution().analyzed().deterministic()
-        rows = _collect(rdd)
+        rows = [json.loads(s) for s in lines]
+        size = sum(map(len, lines))
         with self._prepared_lock:
             if not deterministic:
                 self.ineligible += 1
                 return rows
-            stale = [k for k in self._prepared if k[1] == norm_dir and k[:3] != scope]
-            for k in stale:
-                del self._prepared[k]
-            self._prepared[key] = rdd
-            self._prepared.move_to_end(key)
-            while len(self._prepared) > _PREPARED_MAX:
-                self._prepared.popitem(last=False)
             self.builds += 1
+            for k in [k for k in self._prepared if k[1] == norm_dir and k[:3] != scope]:
+                self._drop(k)
+            if size > _PREPARED_BYTES:
+                return rows
+            if key in self._prepared:  # a racing first call built it too
+                self._drop(key)
+            self._prepared[key] = (rows, size)
+            self._prepared_bytes += size
+            while (
+                len(self._prepared) > _PREPARED_MAX
+                or self._prepared_bytes > _PREPARED_BYTES
+            ):
+                self._drop(next(iter(self._prepared)))
         return rows
+
+    def _drop(self, key: tuple) -> None:
+        """Remove one entry; the caller holds ``_prepared_lock``."""
+        self._prepared_bytes -= self._prepared.pop(key)[1]
+
+    def _forget(self, rows: list | None) -> None:
+        """Remove the entry that keeps ``rows``, if one does."""
+        with self._prepared_lock:
+            for key, (kept, _) in self._prepared.items():
+                if kept is rows:
+                    self._drop(key)
+                    return
 
     @staticmethod
     def _accepts_ctx(fn) -> bool:
@@ -298,10 +342,6 @@ class QueryServer:
             except AttributeError:
                 pass
         return cached
-
-
-def _collect(rdd) -> list:
-    return [json.loads(s) for s in rdd.collect()]
 
 
 def request_once(

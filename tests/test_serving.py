@@ -1,13 +1,14 @@
 """Serving-door contracts (``hive_processor_spark.serving``).
 
 Prepared requests: a repeated eligible request is answered from its kept
-``toJSON()`` RDD, a table replaced or rewritten in place is a miss,
-nondeterministic plans and declared writers are never reused, tenants
-never share an entry and the map is LRU-bounded. The writer declarations
-(``engine.register(..., writes=True)``) are checked statically over the
-whole registry, and a client that hangs up before its reply does not
-crash the server.
-"""
+reply rows without a Spark job, a table replaced or rewritten in place is
+a miss, nondeterministic plans and declared writers are never reused,
+tenants never share an entry and the map is LRU-bounded by count and by
+bytes. The writer declarations (``engine.register(..., writes=True)``) are
+checked statically over the whole registry. Envelopes: a client that hangs
+up before its reply does not crash the server, a reply past the envelope
+cap comes back as an error, and a compressed request that inflates past
+it is refused."""
 
 from __future__ import annotations
 
@@ -21,11 +22,14 @@ import struct
 import sys
 import textwrap
 import threading
+import time
+import uuid
+import zlib
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from hive_processor_spark import queries
+from hive_processor_spark import queries, serving
 from hive_processor_spark.serving import (
     _PREPARED_MAX,
     QueryServer,
@@ -178,17 +182,6 @@ def test_prepared_requests_are_lru_bounded_and_released(spark):
         call(srv, 1)
         assert len(call(srv, 2)["rows"]) == 2  # rebuilt
         assert _counts(srv) == (2, _PREPARED_MAX + 2, 0)
-
-        # a kept entry that no longer runs is dropped and rebuilt once
-        class Gone:
-            def collect(self):
-                raise RuntimeError("shuffle files removed")
-
-        key = next(k for k in srv._prepared if k[-1] == 5)
-        srv._prepared[key] = Gone()
-        assert len(call(srv, 5)["rows"]) == 5
-        assert not isinstance(srv._prepared[key], Gone)
-        assert _counts(srv) == (2, _PREPARED_MAX + 3, 0)
     assert not srv._prepared  # stop() drops every entry
 
 
@@ -223,3 +216,86 @@ def test_client_hangup_before_reply_keeps_server_up(spark, monkeypatch):
         )
     assert reply["ok"] and reply["rows"][0]["n_rows"] > 0
     assert uncaught == []
+
+
+def test_hit_launches_no_spark_job(spark):
+    """A build runs jobs in the calling thread's job group; the repeat is
+    answered from the kept rows and runs none."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    build, hit, marker = (f"prepared-{uuid.uuid4().hex}-{i}" for i in range(3))
+    req = {"sn": 1, "query": "agg_groupby", "sf_dir": SF_SMALL}
+    with QueryServer(spark) as srv:
+        try:
+            for group in (build, hit):
+                sc.setJobGroup(group, group)
+                assert srv._handle(req)["ok"]
+            sc.setJobGroup(marker, marker)
+            spark.range(1).collect()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        assert _counts(srv) == (1, 1, 0)
+    # The status store applies listener events in order, so once the
+    # marker's job shows, any job of the hit would show too.
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(marker)
+    assert tracker.getJobIdsForGroup(build)
+    assert tracker.getJobIdsForGroup(hit) == []
+
+
+def test_byte_budget_evicts_least_recently_used(spark, monkeypatch):
+    def size(limit: int) -> int:  # the JSON length of the first ``limit`` rows
+        return sum(len(json.dumps({"n": i}, separators=(",", ":"))) for i in range(limit))
+
+    def call(srv, limit: int) -> None:
+        reply = srv._handle(
+            {"sn": limit, "query": "tiny", "sf_dir": SF_SMALL, "limit": limit}
+        )
+        assert reply["ok"] and len(reply["rows"]) == limit, reply
+
+    monkeypatch.setattr(serving, "_PREPARED_BYTES", size(10) + size(20))
+    with QueryServer(spark) as srv:
+        srv._functions["tiny"] = lambda s, d: s.range(0, 100, 1, 1).toDF("n")
+        for limit in (10, 20, 10, 15):  # 15 pushes the total past the budget
+            call(srv, limit)
+        assert [k[-1] for k in srv._prepared] == [10, 15]
+        assert srv._prepared_bytes == size(10) + size(15)
+        call(srv, 100)  # over the budget alone: answered, not kept
+        assert [k[-1] for k in srv._prepared] == [10, 15]
+        assert _counts(srv) == (1, 4, 0)
+    assert srv._prepared_bytes == 0
+
+
+def test_oversized_reply_is_an_error_and_not_kept(spark, monkeypatch):
+    monkeypatch.setattr(serving, "_MAX_MSG", 2048)
+    with QueryServer(spark) as srv:
+        srv._functions["wide"] = lambda s, d: s.range(0, 500, 1, 1).toDF("n")
+        for sn, compress in enumerate((False, True)):
+            body = {"sn": sn, "query": "wide", "sf_dir": SF_SMALL}
+            reply = request_once(srv.host, srv.port, body, compress=compress)
+            assert reply["ok"] is False and "use a sink" in reply["error"], reply
+        assert not srv._prepared
+        body = {"sn": 2, "query": "wide", "sf_dir": SF_SMALL, "limit": 3}
+        reply = request_once(srv.host, srv.port, body)
+        assert reply["ok"] and len(reply["rows"]) == 3
+        assert [k[-1] for k in srv._prepared] == [3]
+
+
+def test_compressed_request_inflating_past_cap_is_refused(spark, monkeypatch):
+    monkeypatch.setattr(serving, "_MAX_MSG", 4096)
+    # Trailing whitespace keeps any prefix that ends after the body valid
+    # JSON, so only the size check can refuse it.
+    body = json.dumps({"sn": 1, "query": "agg_global", "sf_dir": SF_SMALL})
+    raw = zlib.compress((body + " " * 100_000).encode("utf-8"))
+    assert len(raw) < 4096
+    with QueryServer(spark) as srv:
+        with socket.create_connection((srv.host, srv.port), timeout=120) as conn:
+            conn.sendall(struct.pack(">I", len(raw)) + raw)
+            assert _read_msg(conn) is None  # closed without a reply
+        reply = request_once(
+            srv.host, srv.port, {"sn": 2, "query": "agg_global", "sf_dir": SF_SMALL}
+        )
+    assert reply["ok"] and reply["rows"][0]["n_rows"] > 0
